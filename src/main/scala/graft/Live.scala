@@ -48,14 +48,17 @@ object Live {
     // cadence falls back to the reference's 5 s, never crashes the ingest
     val triggerMs = opt("GRAFT_TRIGGER_MS").flatMap(_.toLongOption)
       .filter(_ > 0).getOrElse(5000L)
-    // Bounded history for the UNATTENDED entry point: the reference refits
-    // on all history, which Config's Int.MaxValue default preserves for
-    // parity replay (BatchReplay / the oracle specs) — but a live run that
-    // polls for days must not grow per-key state without bound. 10k ticks
-    // ≈ 14 h at the 5 s cadence, far beyond any window the 10-lag model
-    // reads, and the min-max scaler over a 10k sliding window tracks the
-    // regime the forecast actually lives in. GRAFT_MAX_HISTORY overrides
-    // (malformed/non-positive values fall back, the env-parse discipline).
+    // Sliding refit for the UNATTENDED entry point. The ridge refit costs
+    // the same at any history length (running window sums), so the cap
+    // no longer bounds cost: it sets the scaler's regime window. The
+    // reference scales on all history, which Config's Int.MaxValue default
+    // preserves for parity replay (BatchReplay / the oracle specs); a live
+    // run that polls for days should scale on the regime the forecast
+    // lives in. 10k ticks ≈ 14 h at the 5 s cadence, far beyond any window
+    // the 10-lag model reads. Per-key state is bounded at `maxHistory`
+    // prices (the windows that will leave the sums). GRAFT_MAX_HISTORY
+    // overrides (malformed/non-positive values fall back, the env-parse
+    // discipline).
     val maxHistory = opt("GRAFT_MAX_HISTORY").flatMap(_.toIntOption)
       .filter(_ > 0).getOrElse(10000)
     val query = StreamingPipeline.start(ticks,

@@ -1097,6 +1097,74 @@ object ScaleProbe {
     ok
   }
 
+  /** The streaming refit at long history (ROADMAP item 1): ONE key
+    * streams `n` accepted ticks (default 100k) in 1k-tick batches through
+    * the default `Config()`, which refits on the whole history every 10
+    * ticks. Prices move ±1..5 cents per tick, so TR-1 accepts every tick.
+    * For three 10-batch bands — starting at 1k and 10k history, and the
+    * last ten batches (ending at `n`) — it prints ticks/s, p50/p99 batch
+    * latency and the key's state bytes (`memoryUsedBytes`) at the band's
+    * end. Gate: the last band's p50 within 2× the 10k band's — the
+    * first band still carries JIT warm-up, so the gate compares steady
+    * state with steady state. A refit that rescales and rewindows the
+    * whole history grows linearly per batch and fails it long before
+    * 100k. */
+  private def probeStreamHist(spark: org.apache.spark.sql.SparkSession, n: Long): Boolean = {
+    import spark.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.schema.RawTick
+    val batch = 1000
+    val nBatches = (n / batch).toInt
+    require(nBatches >= 20, s"streamhist needs at least 20 batches of $batch ticks, got n=$n")
+    val rnd = new scala.util.Random(31)
+    var cents = 10000L
+    def ticks(b: Int): Seq[RawTick] = (0 until batch).map { i =>
+      val step = (rnd.nextInt(5) + 1) * (if (rnd.nextBoolean()) 1L else -1L)
+      cents = if (cents + step < 100L) cents - step else cents + step
+      RawTick("HIST", new java.sql.Timestamp(1700000000000L + (b.toLong * batch + i) * 1000L),
+        cents / 100.0)
+    }
+    val ms = MemoryStream[RawTick]
+    val q = graft.streaming.StreamingPipeline.events(ms.toDS())
+      .writeStream.format("noop").outputMode("append").start()
+    val times = new Array[Double](nBatches)
+    val stateBytes = new Array[Long](nBatches)
+    val (_, tAll) = timed {
+      try (0 until nBatches).foreach { b =>
+        val feed = ticks(b)
+        val t0 = System.nanoTime()
+        ms.addData(feed)
+        q.processAllAvailable()
+        times(b) = (System.nanoTime() - t0) / 1e9
+        stateBytes(b) = Option(q.lastProgress).map(_.stateOperators.map(_.memoryUsedBytes).sum)
+          .getOrElse(-1L)
+      } finally q.stop()
+    }
+    def pct(xs: Seq[Double], p: Double): Double = {
+      val s = xs.sorted
+      s(math.min(s.size - 1, math.ceil(p * s.size).toInt - 1))
+    }
+    // batch b runs history b·1k → (b+1)·1k; batch 0 (JIT warm-up) is in no band
+    val bands = Seq("1k" -> (1 until 11), "10k" -> (10 until 20),
+      s"${n / 1000}k" -> (nBatches - 10 until nBatches))
+    val rows = bands.map { case (at, idx) =>
+      val ts = idx.map(times(_))
+      (at, idx, batch * ts.size / ts.sum, pct(ts, 0.5), pct(ts, 0.99), stateBytes(idx.last))
+    }
+    val ratio = rows.last._4 / rows(1)._4 // last band over the 10k band
+    val ok = ratio <= 2.0
+    val bandJson = rows.map { case (at, idx, tps, p50, p99, bytes) =>
+      s"""{"at":"$at","history":[${idx.head * batch},${(idx.last + 1) * batch}],""" +
+        f""""ticks_per_s":$tps%.0f,"p50_s":$p50%.3f,"p99_s":$p99%.3f,"state_bytes":$bytes}"""
+    }.mkString("[", ",", "]")
+    println(s"""{"probe":"streamhist","ticks":${nBatches.toLong * batch},"batch":$batch,""" +
+      s""""bands":$bandJson,""" + f""""late_over_base":$ratio%.2f,"total_sec":$tAll%.1f,""" +
+      s""""ok":$ok}""")
+    if (!ok) System.err.println(f"[scaleprobe] streamhist FAILED: late/base p50 = $ratio%.2f > 2")
+    ok
+  }
+
   /** PageRank under POWER-LAW skew (VERDICT r12 #6) — the crawl-graph
     * failure regime the uniform-cycle probe cannot exercise: one hub
     * with in-degree ~n^0.8 (≈110k at the 2M default; a real crawl's
@@ -1293,6 +1361,9 @@ object ScaleProbe {
     // streamkeys: 100k tickers through the ingest state machine (the
     // many-key axis); the 1M rung is run/recorded manually in SCALING.md
     "streamkeys" -> 100000L,
+    // streamhist: ONE key to 100k accepted ticks of history (the long-
+    // history axis), 1k-tick batches through the default config
+    "streamhist" -> 100000L,
     // ivfingest: 1M-vector index + 100 one-file insert batches — the
     // file-count regime where ivfCompact's motivation is measurable
     "ivfingest" -> 1000000L,
@@ -1900,6 +1971,7 @@ object ScaleProbe {
       case "pagerankskew" => probePagerankSkew(spark, size)
       case "kmv" => probeKmv(spark, size)
       case "streamkeys" => probeStreamKeys(spark, size)
+      case "streamhist" => probeStreamHist(spark, size)
       case "ivfingest" => probeIvfIngest(spark, size)
       case "mmr" => probeMmr(spark, size)
       case "dsir" => probeDsir(spark, size)

@@ -103,6 +103,17 @@ final class RidgeForecaster(val seqLen: Int = 10, val horizon: Int = 5,
       }
       n += 1
     }
+    fitFromSums(sxx, sxy, n)
+  }
+
+  /** The solve of [[fitLocal]] from already-accumulated normal-equation
+    * sums over `n` samples: `sxx` is X'X (p×p row-major, p = seqLen + 1,
+    * index 0 the intercept), `sxy` is X'Y (p×horizon row-major). The
+    * streaming refit keeps these as exact running window sums
+    * ([[WindowSums]]) instead of re-reading its history. */
+  def fitFromSums(sxx: Array[Double], sxy: Array[Double], n: Long): ForecastModel = {
+    val p = seqLen + 1
+    require(sxx.length == p * p && sxy.length == p * horizon, "bad normal-equation shape")
     if (n == 0) new LinearModel(seqLen, horizon, Array.fill(horizon)(Array.fill(p)(0.0)))
     else solveFromSums(sxx, sxy, n)
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.model.RidgeForecaster
+import graft.model.WindowSums
 import graft.schema.{RawTick, ScalerParams}
 import graft.sink.CsvSinks
 
@@ -15,17 +15,39 @@ import graft.sink.CsvSinks
   * `labelTsMs` = issue time + step minutes (`lvmh_forecaster2.py:162,181`). */
 final case class PendingForecast(step: Int, labelTsMs: Long, forecasted: Double)
 
-/** Per-ticker pipeline state for [[StreamingPipeline]] — exactly the
-  * scalar state the reference keeps between cycles (SURVEY §7.1 step 6):
-  * firstPrice (TR-2), lastPrice (TR-1), full price history (refit-on-all-
-  * history semantics, `lvmh_forecaster2.py:102`), ticks-since-fit counter
-  * (ML-2), frozen scaler params (NRM-2), model weights (ML-1), the FIFO
-  * buffer of unmatched forecasts (JN-1), and the running squared-error
-  * sums (AGG-2). */
+/** Per-ticker pipeline state for [[StreamingPipeline]]: the scalar state
+  * the reference keeps between cycles (SURVEY §7.1 step 6), with its
+  * full price history (`lvmh_forecaster2.py:102`) replaced by what the
+  * refit actually reads.
+  *
+  *  - `firstPrice` (TR-2; also the centre of the ridge sums' price grid)
+  *    and `lastPrice` (TR-1).
+  *  - `history`: the retained price tail, oldest first. For the ridge
+  *    model it is the last `seqLen + horizon` prices (the next window and
+  *    the next forecast's lags), or the last `maxHistory` when capped (the
+  *    windows that will leave the refit). Boost mode fits on samples, so
+  *    it keeps every price up to `maxHistory`: that bound is what caps its
+  *    state (unbounded under the default config).
+  *  - `minPrice`/`maxPrice`: the scaler's range (NRM-1) over the whole
+  *    history, or over the last `maxHistory` prices when capped; ±∞ before
+  *    the first tick.
+  *  - `windowSums`/`nWindows`: the exact raw sums over every refit window,
+  *    as [[graft.model.WindowSums]] encodes them (ridge only; empty for
+  *    boost). A refit reads these and the range, never the history.
+  *  - ticks since the last fit (ML-2), the frozen scaler (NRM-2), the model
+  *    weights (ML-1), the FIFO buffer of unmatched forecasts (JN-1) and the
+  *    running squared-error sums (AGG-2).
+  *
+  * Under the default ridge config the state has a fixed size, whatever
+  * the history length. */
 final case class TickState(
     firstPrice: Option[Double],
     lastPrice: Option[Double],
     history: Vector[Double],
+    minPrice: Double,
+    maxPrice: Double,
+    windowSums: Vector[Long],
+    nWindows: Long,
     ticksSinceFit: Int,
     bootstrapped: Boolean,
     scaler: Option[ScalerParams],
@@ -37,8 +59,8 @@ final case class TickState(
 
 object TickState {
   val empty: TickState =
-    TickState(None, None, Vector.empty, 0, bootstrapped = false, None, None,
-      Vector.empty, 0.0, 0L, 0L)
+    TickState(None, None, Vector.empty, Double.PositiveInfinity, Double.NegativeInfinity,
+      Vector.empty, 0L, 0, bootstrapped = false, None, None, Vector.empty, 0.0, 0L, 0L)
 }
 
 /** Tagged union of everything the pipeline emits per micro-batch; the
@@ -69,21 +91,29 @@ final case class PipelineEvent(
   * each accepted tick advances the state machine one reference cycle:
   *
   *   TR-1 drop unchanged → TR-2 variation vs firstPrice → history append →
-  *   ML-2 refit every `updateInterval` accepted ticks (NRM-1 full-history
-  *   scaler + ridge on WIN-1 windows, computed locally in state — the
-  *   history lives with the key, a distributed aggregate per retrain would
-  *   shuffle the world) → ML-3 forecast from the latest `seqLen` window
-  *   (NRM-2 frozen transform, predict, NRM-3 invert) → JN-1 fill the
-  *   OLDEST pending forecast with this tick's price (FIFO, not time;
+  *   ML-2 refit every `updateInterval` accepted ticks (NRM-1 min-max
+  *   scaler over the history + ridge on WIN-1 windows, computed locally in
+  *   state — a distributed aggregate per retrain would shuffle the world)
+  *   → ML-3 forecast from the latest `seqLen` window (NRM-2 frozen
+  *   transform, predict, NRM-3 invert) → JN-1 fill the OLDEST pending
+  *   forecast with this tick's price (FIFO, not time;
   *   `lvmh_forecaster2.py:168-177`), bootstrap enqueues all `horizon`
   *   steps, later cycles enqueue only the last step (`:158-166,180-185`)
   *   → AGG-2 cumulative RMSE over all matched pairs (`:126-148`).
   *
+  * The refit keeps the reference's semantics (scale and fit on the whole
+  * history) without its cost: the ridge state holds exact running sums
+  * over every window ([[graft.model.WindowSums]]) and the running min and
+  * max, so a refit costs O(p³) and a tick O(p·(p + horizon)) at any
+  * history length. `maxHistory` turns it into a sliding refit: the window
+  * that leaves is subtracted exactly and each refit reads the range off
+  * the capped price tail.
+  *
   * Scale: state is per-ticker and the stream partitions by ticker hash —
-  * 10k tickers spread over the cluster with no cross-key traffic. The
-  * only unbounded piece is `history` (the reference's own refit-on-all
-  * semantics); `maxHistory` caps it for production (sliding refit) while
-  * the default preserves reference parity.
+  * 10k tickers spread over the cluster with no cross-key traffic. Ridge
+  * state is bounded: a fixed size under the default config, and
+  * `maxHistory` prices when capped. Only boost mode, which fits on
+  * samples, keeps the whole history unless `maxHistory` caps it.
   */
 object StreamingPipeline {
 
@@ -95,6 +125,9 @@ object StreamingPipeline {
       horizon: Int = 5,
       updateInterval: Int = 10,
       labelIntervalMs: Long = 60000L, // reference: timedelta(minutes=step)
+      /** Sliding refit: scale and fit on the last `maxHistory` accepted
+        * prices only (the state then holds that many prices). The default
+        * refits on the whole history, the reference's semantics. */
       maxHistory: Int = Int.MaxValue,
       /** Which Forecaster refits in the loop: "ridge" (closed-form linear,
         * the default) or "boost" ([[graft.model.StableBoost]] — the
@@ -112,7 +145,9 @@ object StreamingPipeline {
     * integer ≤ ~2^28 and hence EXACT in a double. Reusing the slot keeps
     * the state-store schema identical across both models: a production
     * stream can switch model at a planned restart without a state
-    * migration, and checkpoints never fork on schema. */
+    * migration, and checkpoints never fork on schema. (A switch to ridge
+    * rebuilds the window sums from the retained history; a switch to
+    * boost starts its history from the ridge state's retained tail.) */
   private[streaming] def encodeBoost(m: graft.model.StableBoost.BoostModel): Seq[Seq[Double]] =
     (0 until m.horizon).map { h =>
       m.base(h).toDouble +: m.stumps(h).toSeq.flatMap(st =>
@@ -137,106 +172,15 @@ object StreamingPipeline {
     * updated state and the events to emit. */
   private[streaming] def cycle(cfg: Config, st: TickState, ticker: String,
                                ts: Timestamp, price: Double): (TickState, List[PipelineEvent]) = {
+    val loop = new KeyLoop(cfg, st)
     val out = List.newBuilder[PipelineEvent]
-    val first = st.firstPrice.getOrElse(price)
-    val variation = price / first - 1.0
-    out += PipelineEvent(ticker, "tick", ts, 0, 0L, Some(price), Some(variation), None, None, None)
-
-    var history = st.history :+ price
-    if (history.size > cfg.maxHistory) history = history.takeRight(cfg.maxHistory)
-    var ticksSinceFit = st.ticksSinceFit + 1
-    var scaler = st.scaler
-    var weights = st.weights
-
-    // ML-2 retrain trigger (`lvmh_forecaster2.py:355-357`): every
-    // updateInterval accepted ticks, given enough history for one window.
-    if (ticksSinceFit >= cfg.updateInterval && history.size >= cfg.seqLen + cfg.horizon) {
-      val s = ScalerParams(history.min, history.max) // NRM-1 full-history fit
-      val scaled = history.map(s.scale)
-      val samples = (0 to scaled.size - cfg.seqLen - cfg.horizon).map { i =>
-        (scaled.slice(i, i + cfg.seqLen).toArray,
-          scaled.slice(i + cfg.seqLen, i + cfg.seqLen + cfg.horizon).toArray)
-      }
-      weights = cfg.model match {
-        case "boost" =>
-          // the nonlinear in-loop refit: StableBoost.fitLocal is the exact
-          // arithmetic the batch ml1_boost_forecast_per_key query runs per
-          // key, so stream-vs-batch parity is bit-level (StreamingBoostSpec)
-          Some(encodeBoost(graft.model.StableBoost.fitLocal(
-            samples, cfg.seqLen, cfg.horizon, cfg.boostRounds)))
-        case _ =>
-          val model = new RidgeForecaster(cfg.seqLen, cfg.horizon).fitLocal(samples)
-          Some(model.asInstanceOf[graft.model.LinearModel].weights
-            .map(_.toSeq).toSeq)
-      }
-      scaler = Some(s)
-      ticksSinceFit = 0
-    }
-
-    // JN-1 FIFO fill BEFORE appending this cycle's forecast
-    // (`lvmh_forecaster2.py:168-185` fills, then appends).
-    var pending = st.pending
-    var sumSq = st.sumSqErr
-    var n = st.nMatched
-    if (pending.nonEmpty) {
-      val oldest = pending.head
-      pending = pending.tail
-      sumSq += (price - oldest.forecasted) * (price - oldest.forecasted)
-      n += 1
-      // reference overwrites the row's ts with the actual's ts (`:176`)
-      out += PipelineEvent(ticker, "match", ts, oldest.step, n, None, None,
-        Some(oldest.forecasted), Some(price), None)
-      out += PipelineEvent(ticker, "rmse", ts, 0, n, None, None, None, None,
-        Some(math.sqrt(sumSq / n)))
-    }
-
-    // ML-3 forecast + enqueue (bootstrap: all steps; after: last step only)
-    (weights, scaler) match {
-      case (Some(w), Some(s)) if history.size >= cfg.seqLen =>
-        val window = history.takeRight(cfg.seqLen).map(s.scale).toArray
-        val preds = cfg.model match {
-          case "boost" =>
-            val qx = window.map(graft.model.StableRidge.quantizeLong)
-            w.map { row =>
-              s.invert(boostPredictQ(row, qx).toDouble /
-                graft.model.StableRidge.Q.toDouble) // NRM-3
-            }
-          case _ => w.map { wh =>
-            var acc = wh.head
-            var i = 0
-            while (i < cfg.seqLen) { acc += wh(i + 1) * window(i); i += 1 }
-            s.invert(acc) // NRM-3
-          }
-        }
-        val steps = if (st.bootstrapped) Seq(cfg.horizon) else 1 to cfg.horizon
-        var enq = st.nEnqueued
-        steps.foreach { k =>
-          // Reference stamping parity (`lvmh_forecaster2.py:162,181`): the
-          // bootstrap burst stamps timedelta(minutes=i) for i in
-          // 0..horizon-1 (step k → k-1 intervals), while steady-state
-          // stamps minutes=horizon for its single last-step row. Matching
-          // is FIFO-by-seq and the match overwrites ts, so this only
-          // affects the NULL-tail rows' displayed timestamps.
-          val intervals = if (st.bootstrapped) k else k - 1
-          val labelTs = ts.getTime + intervals * cfg.labelIntervalMs
-          pending = pending :+ PendingForecast(k, labelTs, preds(k - 1))
-          enq += 1
-          out += PipelineEvent(ticker, "forecast", new Timestamp(labelTs), k, enq,
-            None, None, Some(preds(k - 1)), None, None)
-        }
-        val newState = TickState(Some(first), Some(price), history, ticksSinceFit,
-          bootstrapped = true, scaler, weights, pending, sumSq, n, enq)
-        (newState, out.result())
-      case _ =>
-        val newState = TickState(Some(first), Some(price), history, ticksSinceFit,
-          st.bootstrapped, scaler, weights, pending, sumSq, n, st.nEnqueued)
-        (newState, out.result())
-    }
+    loop.step(ticker, ts, price, out)
+    (loop.state, out.result())
   }
 
   private def stateFunc(cfg: Config)(ticker: String, ticks: Iterator[RawTick],
                                      state: GroupState[TickState]): Iterator[PipelineEvent] = {
-    var st = state.getOption.getOrElse(TickState.empty)
+    val loop = new KeyLoop(cfg, state.getOption.getOrElse(TickState.empty))
     val out = List.newBuilder[PipelineEvent]
     // micro-batch iterators are unordered; impose the deterministic
     // (ts, price) order — the SAME tiebreak the batch path uses
@@ -244,13 +188,10 @@ object StreamingPipeline {
     // same-timestamp ticks (TR-3: timestamps are assigned at the source,
     // injected in replay)
     ticks.toSeq.sortBy(t => (t.timestamp.getTime, t.price)).foreach { t =>
-      if (!st.lastPrice.contains(t.price)) { // TR-1
-        val (next, events) = cycle(cfg, st, ticker, t.timestamp, t.price)
-        st = next
-        out ++= events
-      }
+      if (!loop.lastPrice.contains(t.price)) // TR-1
+        loop.step(ticker, t.timestamp, t.price, out)
     }
-    state.update(st)
+    state.update(loop.state)
     out.result().iterator
   }
 
@@ -411,5 +352,173 @@ object StreamingPipeline {
         outDir, "actual_data", at),                                      // SNK-2
       CsvSinks.writeTimestampedCsv(t3.toDF(), outDir, "forecast_comparison", at), // SNK-3
       CsvSinks.writeTimestampedCsv(t4.toDF(), outDir, "rmse_history", at)) // SNK-4
+  }
+}
+
+/** One key's state machine, mutable for the length of one micro-batch:
+  * decoded from its [[TickState]] once, stepped once per accepted tick,
+  * encoded back once. The retained price tail is a ring. Uncapped, the
+  * range is the running min and max; when `maxHistory` caps the ring, it
+  * is the ring's min and max, read at each refit and at encode. */
+private[streaming] final class KeyLoop(cfg: StreamingPipeline.Config, st: TickState) {
+  import scala.collection.mutable
+  require(cfg.maxHistory > 0, s"maxHistory must be positive, got ${cfg.maxHistory}")
+
+  private val ridge = cfg.model != "boost"
+  private val width = cfg.seqLen + cfg.horizon
+  private val sliding = cfg.maxHistory != Int.MaxValue
+  private val retain = if (!ridge || sliding) cfg.maxHistory else width
+
+  private var first = st.firstPrice
+  private var last = st.lastPrice
+  private val ring = mutable.ArrayDeque.from(st.history)
+  private var minP = st.minPrice
+  private var maxP = st.maxPrice
+  private var ticksSinceFit = st.ticksSinceFit
+  private var bootstrapped = st.bootstrapped
+  private var scaler = st.scaler
+  private var weights = st.weights
+  private var pending = st.pending
+  private var sumSq = st.sumSqErr
+  private var nMatched = st.nMatched
+  private var nEnqueued = st.nEnqueued
+
+  private def centre: Double = first.getOrElse(0.0)
+  private def grid(p: Double): Long = WindowSums.quantize(p, centre)
+  private def window(from: Int): Array[Long] = Array.tabulate(width)(i => grid(ring(from + i)))
+
+  // Sums are rebuilt from the retained prices when the state has none
+  // (a fresh key, or a restart that switched from boost) or, under a cap,
+  // when they cover other windows than the retained ones (a restart that
+  // switched from the uncapped config).
+  private val sums: Option[WindowSums] =
+    if (!ridge) None
+    else if (st.windowSums.nonEmpty &&
+        (!sliding || st.nWindows == math.max(0, ring.size - width + 1)))
+      Some(WindowSums.decode(cfg.seqLen, cfg.horizon, st.windowSums, st.nWindows))
+    else Some(WindowSums.rebuild(ring.map(grid).toIndexedSeq, cfg.seqLen, cfg.horizon))
+
+  while (ring.size > retain) evictHead()
+
+  /** Drop the oldest retained price; under a cap its window leaves the
+    * refit too (the default ridge sums keep every window). */
+  private def evictHead(): Unit = {
+    if (sliding && ring.size >= width) sums.foreach(_.subtract(window(0)))
+    ring.removeHead()
+  }
+
+  private def push(price: Double): Unit = {
+    if (ring.size == retain) evictHead()
+    ring.append(price)
+    if (!sliding) { minP = math.min(minP, price); maxP = math.max(maxP, price) }
+    if (ring.size >= width) sums.foreach(_.add(window(ring.size - width)))
+  }
+
+  /** Under a cap, set the range to the retained ring's. */
+  private def capRange(): Unit =
+    if (sliding && ring.nonEmpty) { minP = ring.min; maxP = ring.max }
+
+  def lastPrice: Option[Double] = last
+
+  def state: TickState = {
+    capRange()
+    TickState(first, last, ring.toVector, minP, maxP,
+      sums.fold(Vector.empty[Long])(_.toVector), sums.fold(0L)(_.windows), ticksSinceFit,
+      bootstrapped, scaler, weights, pending, sumSq, nMatched, nEnqueued)
+  }
+
+  /** One reference cycle for one accepted (post-TR-1) tick. */
+  def step(ticker: String, ts: Timestamp, price: Double,
+           out: mutable.Growable[PipelineEvent]): Unit = {
+    if (price.isNaN || price.isInfinite)
+      throw new IllegalArgumentException(s"ticker $ticker at $ts: price $price is not finite")
+    val c = first.getOrElse(price)
+    first = Some(c)
+    last = Some(price)
+    out += PipelineEvent(ticker, "tick", ts, 0, 0L, Some(price), Some(price / c - 1.0),
+      None, None, None)
+    // the ridge sums raise on a price off the grid's range (checked here,
+    // before the price waits in the ring for a full window) and on a cell
+    // overflow; both fail the query naming the tick that caused them
+    try { if (ridge) grid(price); push(price) }
+    catch {
+      case e: ArithmeticException =>
+        throw new IllegalArgumentException(
+          s"ticker $ticker at $ts: price $price cannot enter the window sums: ${e.getMessage}", e)
+    }
+    ticksSinceFit += 1
+
+    // ML-2 retrain trigger (`lvmh_forecaster2.py:355-357`): every
+    // updateInterval accepted ticks, given enough history for one window.
+    if (ticksSinceFit >= cfg.updateInterval && ring.size >= width) {
+      capRange()
+      val s = ScalerParams(minP, maxP) // NRM-1 over the history (or the cap)
+      weights = Some(sums match {
+        case Some(w) =>
+          w.fit(grid(minP), grid(maxP)).weights.map(_.toSeq).toSeq
+        case None =>
+          // the nonlinear in-loop refit: StableBoost.fitLocal is the exact
+          // arithmetic the batch ml1_boost_forecast_per_key query runs per
+          // key, so stream-vs-batch parity is bit-level (StreamingBoostSpec)
+          val scaled = ring.map(s.scale)
+          val samples = (0 to scaled.size - width).map { i =>
+            (scaled.slice(i, i + cfg.seqLen).toArray,
+              scaled.slice(i + cfg.seqLen, i + width).toArray)
+          }
+          StreamingPipeline.encodeBoost(graft.model.StableBoost.fitLocal(
+            samples, cfg.seqLen, cfg.horizon, cfg.boostRounds))
+      })
+      scaler = Some(s)
+      ticksSinceFit = 0
+    }
+
+    // JN-1 FIFO fill BEFORE appending this cycle's forecast
+    // (`lvmh_forecaster2.py:168-185` fills, then appends).
+    if (pending.nonEmpty) {
+      val oldest = pending.head
+      pending = pending.tail
+      sumSq += (price - oldest.forecasted) * (price - oldest.forecasted)
+      nMatched += 1
+      // reference overwrites the row's ts with the actual's ts (`:176`)
+      out += PipelineEvent(ticker, "match", ts, oldest.step, nMatched, None, None,
+        Some(oldest.forecasted), Some(price), None)
+      out += PipelineEvent(ticker, "rmse", ts, 0, nMatched, None, None, None, None,
+        Some(math.sqrt(sumSq / nMatched)))
+    }
+
+    // ML-3 forecast + enqueue (bootstrap: all steps; after: last step only)
+    (weights, scaler) match {
+      case (Some(w), Some(s)) if ring.size >= cfg.seqLen =>
+        val lags = Array.tabulate(cfg.seqLen)(i => s.scale(ring(ring.size - cfg.seqLen + i)))
+        val preds = if (ridge) w.map { wh =>
+          var acc = wh.head
+          var i = 0
+          while (i < cfg.seqLen) { acc += wh(i + 1) * lags(i); i += 1 }
+          s.invert(acc) // NRM-3
+        } else {
+          val qx = lags.map(graft.model.StableRidge.quantizeLong)
+          w.map { row =>
+            s.invert(StreamingPipeline.boostPredictQ(row, qx).toDouble /
+              graft.model.StableRidge.Q.toDouble) // NRM-3
+          }
+        }
+        val steps = if (bootstrapped) Seq(cfg.horizon) else 1 to cfg.horizon
+        steps.foreach { k =>
+          // Reference stamping parity (`lvmh_forecaster2.py:162,181`): the
+          // bootstrap burst stamps timedelta(minutes=i) for i in
+          // 0..horizon-1 (step k → k-1 intervals), while steady-state
+          // stamps minutes=horizon for its single last-step row. Matching
+          // is FIFO-by-seq and the match overwrites ts, so this only
+          // affects the NULL-tail rows' displayed timestamps.
+          val intervals = if (bootstrapped) k else k - 1
+          val labelTs = ts.getTime + intervals * cfg.labelIntervalMs
+          pending = pending :+ PendingForecast(k, labelTs, preds(k - 1))
+          nEnqueued += 1
+          out += PipelineEvent(ticker, "forecast", new Timestamp(labelTs), k, nEnqueued,
+            None, None, Some(preds(k - 1)), None, None)
+        }
+        bootstrapped = true
+      case _ =>
+    }
   }
 }

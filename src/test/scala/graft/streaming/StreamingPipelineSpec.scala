@@ -125,9 +125,12 @@ class StreamingPipelineSpec extends SparkSpec {
     // must be identical to never having stopped. A state-encoding field
     // the snapshot misses (scaler params, FIFO buffer, refit counter, or
     // a model weights slot — ridge matrix or boost stumps) diverges the
-    // continuation and fails here.
-    for (model <- Seq("ridge", "boost")) {
-      val mcfg = cfg.copy(model = model)
+    // continuation and fails here. The sliding case caps the history at
+    // 18 prices, so by the stop windows have already left the ridge sums
+    // and the range deques are rebuilt from the restored price tail.
+    val configs = Seq("ridge" -> cfg, "boost" -> cfg.copy(model = "boost"),
+      "ridge_sliding" -> cfg.copy(maxHistory = 18))
+    for ((model, mcfg) <- configs) {
       def run(splitAt: Option[Int]): Seq[PipelineEvent] = {
         implicit val sql = spark.sqlContext
         val dir = Files.createTempDirectory(s"graft_restart_$model").toString
@@ -158,6 +161,22 @@ class StreamingPipelineSpec extends SparkSpec {
       assert(restarted == uninterrupted,
         s"$model: restart from checkpoint diverged from the uninterrupted run")
     }
+  }
+
+  test("a NaN price fails the query with an error naming the ticker and timestamp") {
+    implicit val sql = spark.sqlContext
+    val ms = MemoryStream[RawTick]
+    val q = StreamingPipeline.events(ms.toDS(), cfg).writeStream
+      .format("memory").queryName(s"nan_${System.nanoTime()}").outputMode("append").start()
+    val badTs = new Timestamp(1700000003500L)
+    try {
+      ms.addData(fixture.take(4) :+ RawTick("MC.PA", badTs, Double.NaN))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString("\n")
+      assert(messages.contains("ticker MC.PA") && messages.contains(badTs.toString) &&
+        messages.contains("NaN"), messages)
+    } finally q.stop()
   }
 
   test("full DAG with foreachBatch fan-out: sinks byte-stable across replays (SNK-1..4, CTL-1/3)") {
