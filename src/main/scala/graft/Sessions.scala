@@ -14,6 +14,11 @@ import org.apache.spark.sql.SparkSession
   *  - `nanosAsLong`: the driver's `events.parquet` carries INT64
   *    TIMESTAMP(NANOS), which Spark's reader rejects by default;
   *    [[Tables.events]] relies on this being set at construction.
+  *  - `fs.file.impl` / `fs.AbstractFileSystem.file.impl` bind `file:` to
+  *    [[graft.io.LocalFs]]'s classes, which fork no `chmod`/`readlink` per
+  *    checkpoint file. Hadoop's `FileSystem` cache ignores the conf, so a
+  *    `file:` filesystem created earlier in the JVM keeps serving: the
+  *    session checks the resolved class once and WARNs naming it.
   */
 object Sessions {
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
@@ -24,6 +29,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(graft.io.LocalFs.confs)
     // deployment-conf passthrough for the pipe_prep AQE knob
     // (PrepPipeline.prepSession reads `graft.prep.adaptive`): lets the
     // contention-robustness demos flip the config per PROCESS without
@@ -36,6 +42,7 @@ object Sessions {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.io.LocalFs.checkBound(spark.sparkContext.hadoopConfiguration)
     spark
   }
 }

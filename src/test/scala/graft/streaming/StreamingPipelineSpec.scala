@@ -3,10 +3,12 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+import graft.io.{ForkFreeLocalFileSystem, ForkFreeLocalFs, LocalFsSpec}
 import graft.schema.RawTick
 
 /** SURVEY §5.3 — end-to-end replay of the reference pipeline on a fixture
@@ -176,6 +178,26 @@ class StreamingPipelineSpec extends SparkSpec {
         .map(t => String.valueOf(t.getMessage)).mkString("\n")
       assert(messages.contains("ticker MC.PA") && messages.contains(badTs.toString) &&
         messages.contains("NaN"), messages)
+    } finally q.stop()
+  }
+
+  test("micro-batches spawn no process: checkpoint I/O binds the fork-free file: filesystem") {
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    assert(FileSystem.get(java.net.URI.create("file:///"), hadoopConf).isInstanceOf[ForkFreeLocalFileSystem])
+    assert(FileContext.getLocalFSFileContext(hadoopConf).getDefaultFileSystem.isInstanceOf[ForkFreeLocalFs])
+    implicit val sql = spark.sqlContext
+    val out = Files.createTempDirectory("graft_spawn_out").toString
+    val ckpt = Files.createTempDirectory("graft_spawn_ckpt").toString
+    val ms = MemoryStream[RawTick]
+    val q = StreamingPipeline.start(ms.toDS(), cfg, out, ckpt, Trigger.ProcessingTime(0), console = false)
+    try {
+      def batch(ticks: Seq[RawTick]): Unit = { ms.addData(ticks); q.processAllAvailable() }
+      val batches = fixture.grouped(10).toSeq
+      batch(batches.head)
+      // batches 2–4: offset log, state deltas + checksum files, commit log, parquet slices
+      val forked = LocalFsSpec.spawns(batches.slice(1, 4).foreach(batch))
+      assert(forked.isEmpty, s"${forked.size} process spawns in micro-batches 2-4:\n${forked.mkString("\n")}")
+      assert(Files.exists(Paths.get(ckpt, "commits", "3")), "the recorded batches did not commit")
     } finally q.stop()
   }
 
