@@ -1,0 +1,64 @@
+package graft
+
+import java.sql.Timestamp
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
+import graft.schema.RawTick
+import graft.streaming.StreamingPipeline
+
+/** A repeated plan reuses its generated classes: the codegen cache holds a
+  * whole query (`spark.sql.codegen.cache.maxEntries`), and session clones
+  * share one class loader (`spark.sql.artifact.isolation.enabled=false`),
+  * both set by [[Sessions.local]]. Counts are deltas of Spark's
+  * process-wide compilation counter. */
+class CodegenReuseSpec extends SparkSpec {
+
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  private def counted(body: => Unit): Long = {
+    val c0 = compiles()
+    body
+    compiles() - c0
+  }
+
+  private def run(s: SparkSession, query: String): Unit =
+    SparkEntry.queries(query)(s, sfDir).write.format("noop").mode("overwrite").save()
+
+  test("a second pipe_prep run compiles no class") {
+    run(spark, "pipe_prep")
+    val again = counted(run(spark, "pipe_prep"))
+    assert(again == 0, s"second pipe_prep run compiled $again classes")
+  }
+
+  test("a session clone reuses the classes its parent compiled") {
+    run(spark, "q1_pricing_summary")
+    val onClone = counted(run(spark.newSession(), "q1_pricing_summary"))
+    assert(onClone == 0, s"the clone compiled $onClone classes")
+  }
+
+  test("a second stream query's first micro-batch compiles no more than its second") {
+    implicit val sql = spark.sqlContext
+    import spark.implicits._
+    def batch(b: Int): Seq[RawTick] = for {
+      ticker <- Seq("MC.PA", "OR.PA"); i <- 0 until 50
+    } yield {
+      val n = b * 50 + i
+      RawTick(ticker, new Timestamp(1700000000000L + n * 1000L), 100.0 + (n * 37 % 101) / 100.0)
+    }
+    // compile counts of a fresh stream query's first two micro-batches
+    def stream(): Seq[Long] = {
+      val ms = MemoryStream[RawTick]
+      val q = StreamingPipeline.events(ms.toDS()).writeStream
+        .format("memory").queryName(s"codegen_${System.nanoTime()}").outputMode("append").start()
+      try (0 until 2).map { b => counted { ms.addData(batch(b)); q.processAllAvailable() } }
+      finally q.stop()
+    }
+    stream()
+    val second = stream()
+    assert(second(0) <= second(1),
+      s"the second query's first batch compiled ${second(0)} classes, its second ${second(1)}")
+  }
+}
