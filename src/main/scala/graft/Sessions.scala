@@ -28,21 +28,31 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.artifact.isolation.enabled` = false: the codegen cache key
   *    includes the class loader, and isolation gives every `newSession()`
   *    clone its own `ExecutorClassLoader`, so identical code compiled
-  *    again on each clone (`PrepPipeline.prepSession`, GraphRank's and
-  *    `Similarity`'s clones, and each stream query's session). Nothing
-  *    here adds session artifacts, so this changes nothing else. A second
-  *    `pipe_prep` run at sf0.001 compiles 79 classes at Spark's defaults,
-  *    59 with the cap alone, 45 with this alone and 0 with both
+  *    again on each clone ([[composed]] and each stream query's session).
+  *    Nothing here adds session artifacts, so this changes nothing else. A
+  *    second `pipe_prep` run at sf0.001 compiles 79 classes at Spark's
+  *    defaults, 59 with the cap alone, 45 with this alone and 0 with both
   *    (`CodegenReuseSpec`).
+  *  - `spark.sql.codegen.useIdInClassName` = false: adaptive execution can
+  *    number a plan's whole-stage codegen stages differently from one run
+  *    to the next, and the stage id is part of the generated class name
+  *    (`GeneratedIteratorForCodegenStage3` vs `…Stage4`, same body), so a
+  *    repeated plan missed the codegen cache. Without the id the class name
+  *    is fixed and the cache key is the code alone.
   *  - `fs.file.impl` / `fs.AbstractFileSystem.file.impl` bind `file:` to
   *    [[graft.io.LocalFs]]'s classes, which fork no `chmod`/`readlink` per
   *    checkpoint file. Hadoop's `FileSystem` cache ignores the conf, so a
   *    `file:` filesystem created earlier in the JVM keeps serving: the
   *    session checks the resolved class once and WARNs naming it.
+  *
+  * Session confs are set at construction and never written afterwards on a
+  * session a caller handed in. A query that needs its own execution
+  * settings runs on a clone from [[composed]], the one place product code
+  * makes a clone.
   */
 object Sessions {
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -51,20 +61,37 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config(graft.io.LocalFs.confs)
-    // deployment-conf passthrough for the pipe_prep AQE knob
-    // (PrepPipeline.prepSession reads `graft.prep.adaptive`): lets the
-    // contention-robustness demos flip the config per PROCESS without
-    // code edits — exactly how a cluster deployment would set it
-    // normalized: the consumer matches the exact string "true", so "1",
-    // "TRUE", "True" must not silently select the clone config
-    sys.env.get("SPARK_GRAFT_PREP_ADAPTIVE").foreach { v =>
-      val norm = if (v == "1") "true" else v.toLowerCase(java.util.Locale.ROOT)
-      builder.config("graft.prep.adaptive", norm); ()
-    }
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.io.LocalFs.checkBound(spark.sparkContext.hadoopConfiguration)
     spark
+  }
+
+  /** The execution policy of the composed queries (the prep chain,
+    * PageRank, the kNN eval, MMR): a lazy clone of `spark` with adaptive
+    * execution off and a static shuffle width of 8. The clone shares the
+    * context, catalog, cache manager, extensions and (see above) generated
+    * classes; only its SQL conf is its own, so the caller's session is
+    * never written.
+    *  - AQE off: these queries run eager inter-stage actions and iterative
+    *    rounds, and AQE materializes every shuffle stage of each as its
+    *    own sequential blocking job, a re-queue point under host load. At
+    *    sf0.1 `pipe_prep_semantic` ran 94 jobs with AQE and 23 without,
+    *    PageRank's 10 rounds 58 jobs and one, a kNN eval 165. Rows are
+    *    oracle-pinned identical.
+    *  - width 8: past their scans these frames are workload-sized (ids,
+    *    digests, ranks, nQ·k rows), so a core-count width spends each
+    *    stage on task scheduling.
+    *  - the cost: AQE's small-data conveniences are lost (runtime
+    *    broadcast of the id-keeper joins, coalescing of tiny shuffles),
+    *    about 1.4–1.6× wall on the prep family at sf0.1, and so is its
+    *    skew handling at corpus scale. */
+  def composed(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    s
   }
 }

@@ -407,19 +407,15 @@ object Dedup {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
 
-  /** Default for [[dupClusters]]' `localEdgeLimit`: `GRAFT_CC_LOCAL_EDGES`
-    * when it parses as a non-negative long, else 2^20 — a malformed env
-    * var degrades to the default instead of crashing every clustering
-    * call. NOTE the limit applies to the DIRECTED edge list (each
-    * undirected pair is counted twice by the union below), so the
-    * effective undirected-pair cap is HALF this value: the default admits
-    * ~2^19 pairs ≈ 8 MB of long pairs to the driver fast path. */
-  private def defaultLocalEdgeLimit: Long =
-    sys.env.get("GRAFT_CC_LOCAL_EDGES").flatMap(_.toLongOption).filter(_ >= 0L)
-      .getOrElse(1L << 20)
+  /** Default for [[dupClusters]]' `localEdgeLimit`. NOTE the limit
+    * applies to the DIRECTED edge list (each undirected pair is counted
+    * twice by the union below), so the effective undirected-pair cap is
+    * HALF this value: 2^19 pairs ≈ 8 MB of long pairs to the driver fast
+    * path. */
+  private val DefaultLocalEdgeLimit: Long = 1L << 20
 
   def dupClusters(docs: DataFrame, pairs: DataFrame,
-                  localEdgeLimit: Long = defaultLocalEdgeLimit): DataFrame = {
+                  localEdgeLimit: Long = DefaultLocalEdgeLimit): DataFrame = {
     val labels = dupLabels(pairs, localEdgeLimit)
     docs.select(col("doc_id"))
       .join(labels.withColumnRenamed("keeper", "__k"), Seq("doc_id"), "left")
@@ -433,7 +429,7 @@ object Dedup {
     * left join against this subgraph-sized side instead of joining two
     * corpus-sized frames. */
   private[analytics] def dupLabels(pairs: DataFrame,
-                                   localEdgeLimit: Long = defaultLocalEdgeLimit): DataFrame = {
+                                   localEdgeLimit: Long = DefaultLocalEdgeLimit): DataFrame = {
     // localCheckpoint (eager), NOT cache: an iterative dataflow's logical
     // plan grows exponentially round-over-round if each round's plan
     // embeds the last (cache leaves lineage in place); checkpointing
@@ -445,10 +441,9 @@ object Dedup {
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .localCheckpoint(false)
     val spark = pairs.sparkSession
-    // one action: runs pair generation, fills the checkpoint, sizes both
-    // the path choice below and the distributed path's round shuffles
+    // one action: runs pair generation, fills the checkpoint and sizes
+    // the path choice below
     val nEdges = edges.count()
-    val debug = sys.env.contains("GRAFT_DEBUG")
     def labelSum(df: DataFrame): Long = // coalesce: sum of zero rows is NULL
       df.agg(coalesce(sum("keeper"), lit(0L))).head().getLong(0)
     var labels: DataFrame = null
@@ -489,8 +484,6 @@ object Dedup {
         spark.createDataFrame(nodes.iterator.map(n => (n, find(n))).toSeq)
           .toDF("doc_id", "keeper"))
       converged = true
-      if (debug) System.err.println(
-        s"[dupClusters] local union-find: ${es.length} pairs, ${nodes.size} nodes")
     } else {
     // propagate over the edge-touched subgraph only: in a real corpus the
     // overwhelming majority of documents are in NO near-dup pair, and
@@ -502,36 +495,12 @@ object Dedup {
     // labels only ever decrease, so the fixpoint test is one aggregate:
     // the label sum is strictly monotone until convergence.
     var prevSum = labelSum(labels)
-    // Size the round shuffles to the SUBGRAPH, not the corpus: the
-    // edge-touched subgraph is usually orders of magnitude smaller than
-    // the input (near-dups are rare), yet every round's ~5 shuffle stages
-    // would otherwise launch spark.sql.shuffle.partitions tasks each —
-    // at small subgraphs the job is pure scheduling overhead (measured
-    // ~0.5 s/round at a few-hundred-node subgraph on local[32]). One
-    // partition per ~64k edges keeps partitions well under memory limits
-    // (an edge row is two longs) and restores the session default for
-    // corpus-scale subgraphs. Conf is restored before the corpus-sized
-    // result join below is ever executed (it is lazy).
-    val sessionPartitions = spark.conf.get("spark.sql.shuffle.partitions")
-    val roundPartitions =
-      math.min(sessionPartitions.toLong, math.max(1L, nEdges / 65536L))
     // with path halving each round covers ~2^round hops, so 50 rounds
     // bounds component diameter at ~2^50 — unreachable in practice; a
     // non-converged exit would mean a logic error and must fail loudly
     // rather than return silently split clusters
     val maxRounds = 50
-    val sessionAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", roundPartitions.toString)
-    // AQE's per-shuffle re-planning barrier is pure latency on the tiny
-    // pre-sized round stages (the partition count above already encodes
-    // what AQE would discover); at corpus scale roundPartitions hits the
-    // session cap and skew handling matters again, so only bypass AQE
-    // when the subgraph is small enough to be latency- not data-bound
-    if (roundPartitions < sessionPartitions.toLong)
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
     while (!converged && rounds < maxRounds) {
-      val tRound = System.nanoTime()
       val viaNeighbors = edges.join(labels, edges("dst") === labels("doc_id"))
         .select(edges("src").as("doc_id"), col("keeper"))
       // oneHop is read from BOTH sides of the halving self-join: persist
@@ -582,12 +551,6 @@ object Dedup {
       labels = next
       checkpointRdd(superseded).foreach(_.unpersist(blocking = false))
       rounds += 1
-      if (debug) System.err.println(
-        f"[dupClusters] round $rounds: ${(System.nanoTime() - tRound) / 1e9}%.2f s")
-    }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", sessionPartitions)
-      spark.conf.set("spark.sql.adaptive.enabled", sessionAqe)
     }
     if (!converged) throw new IllegalStateException(
       s"dupClusters did not converge in $maxRounds halving rounds " +
@@ -600,8 +563,6 @@ object Dedup {
     // Bench) unpersist all registered RDDs after materializing each result,
     // which reclaims it — the ContextCleaner's GC sweep is the fallback.
     checkpointRdd(edges).foreach(_.unpersist(blocking = false))
-    if (debug)
-      System.err.println(s"[dupClusters] converged in $rounds rounds")
     labels
   }
 

@@ -3,6 +3,8 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
+
 /** Graph centrality over the similarity graph — PageRank (Brin & Page
   * 1998) power iteration run on the embedding near-neighbor pair graph
   * the dedup family already builds.
@@ -100,29 +102,9 @@ object GraphRank {
   def pagerankQuery(spark: SparkSession, dir: String, iters: Int = 10,
                     topK: Int = 25): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // AQE-off session CLONE (r19 — the mmrRerank / prepSession recipe):
-    // under AQE each of the 10 rounds materialized its join + aggregate
-    // stages as separate sequential blocking jobs (Profile: 58 jobs /
-    // 9 s wall at sf0.1, scaling ratio 0.66 — pure per-job latency, each
-    // a re-queue point under host load). The static plan runs the whole
-    // loop inside ONE job; rows are oracle-pinned identical. A real-scale
-    // deployment keeps AQE's skew handling by running the loop on the
-    // parent session (`graft.prep.adaptive=true` semantics) — at that
-    // scale per-job launch latency is noise; the knob mirrors
-    // PrepPipeline.prepSession.
-    val s =
-      if (spark.conf.getOption("graft.prep.adaptive").contains("true")) spark
-      else {
-        val c = spark.newSession()
-        c.conf.set("spark.sql.adaptive.enabled", "false")
-        // static width sized like prepSession: the loop's rank frames are
-        // node-count rows of 16 bytes — at bench SFs a session-wide 32
-        // spends the rounds on task scheduling; a corpus-scale run sets
-        // graft.prep.adaptive=true (above) and never reaches this branch
-        c.conf.set("spark.sql.shuffle.partitions",
-          spark.conf.getOption("graft.prep.partitions").getOrElse("8"))
-        c
-      }
+    // Sessions.composed: with AQE the 10 rounds ran as 58 sequential
+    // jobs at sf0.1; the static plan runs the whole loop inside one job
+    val s = Sessions.composed(spark)
     val pairs = Similarity.embeddingDupLsh(s, dir).select("vec_a", "vec_b")
     pagerank(pairs, iters)
       .orderBy(col("r").desc, col("node")).limit(topK)

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Sessions, Tables}
 
 /** The flagship training-data-prep composition: the full manifest a
   * corpus curation run produces, as ONE dataflow over the building
@@ -33,42 +33,12 @@ import graft.Tables
   * text-bearing frames are scan-side projections), so the composition
   * scales exactly like its parts; each stage is independently
   * hash-oracled by its own query, and each composition is oracled
-  * end-to-end by its mirrored CTE chain. */
+  * end-to-end by its mirrored CTE chain. Each `(spark, dir)` entry point
+  * runs its chain on a [[Sessions.composed]] clone. */
 object PrepPipeline {
 
-  /** Whole-chain AQE-off via a session CLONE (VERDICT r14 #2 — the MMR
-    * recipe, `Similarity.mmrRerank`): the prep compositions were the
-    * last family with r12-shaped contention-amplification exposure —
-    * 94/77/63 Spark jobs on `pipe_prep_semantic`/`_clean`/`_dsir`,
-    * because AQE materializes EVERY shuffle stage of every eager
-    * inter-stage checkpoint as its own sequential blocking job, and
-    * each blocking job is a re-queue point under host load (the
-    * r12/r13 30-70× amplification mechanism). The clone shares the
-    * context, catalog, and cache; rows are oracle-pinned identical.
-    * Measured at sf0.1: semantic 94 → 23 jobs, clean 77 → 17,
-    * dsir 63 → 16 — at the honest price of losing AQE's TOY-SCALE
-    * conveniences (runtime broadcast of the id-keeper joins, partition
-    * coalescing of the tiny inter-stage shuffles), ~1.4-1.6× wall on
-    * this family at sf0.1; the warm refs carry the new values and
-    * docs/SCALING.md documents the trade. The static shuffle width is
-    * sized for the bench's data (8); both knobs are deployment conf:
-    * a 1000-executor run at real scale sets `graft.prep.adaptive=true`
-    * on the parent session to keep AQE's skew handling (there the id
-    * frames are corpus-sized, nothing is broadcastable anyway, and
-    * per-job launch latency is noise), and `graft.prep.partitions`
-    * to the corpus-appropriate width. */
-  private def prepSession(spark: SparkSession): SparkSession = {
-    val s = spark.newSession()
-    if (!spark.conf.getOption("graft.prep.adaptive").contains("true")) {
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.shuffle.partitions",
-        spark.conf.getOption("graft.prep.partitions").getOrElse("8"))
-    }
-    s
-  }
-
   def manifest(spark: SparkSession, dir: String): DataFrame =
-    manifestOf(Tables.documents(prepSession(spark), dir))
+    manifestOf(Tables.documents(Sessions.composed(spark), dir))
 
   /** The same composition over an arbitrary (doc_id, text, ...) frame —
     * what the streaming→batch handoff runs over ingest-dedup survivors
@@ -86,7 +56,7 @@ object PrepPipeline {
   }
 
   def manifestHtml(spark: SparkSession, dir: String): DataFrame =
-    manifestHtmlOf(Tables.documents(prepSession(spark), dir))
+    manifestHtmlOf(Tables.documents(Sessions.composed(spark), dir))
 
   /** The v7 chain — curation FROM CRAWL HTML (`pipe_prep_html`): real
     * pipelines' stage zero is HTML → text (C4 and FineWeb both open
@@ -106,7 +76,7 @@ object PrepPipeline {
       .select("doc_id", "text"))
 
   def manifestQuality(spark: SparkSession, dir: String): DataFrame =
-    manifestQualityOf(Tables.documents(prepSession(spark), dir))
+    manifestQualityOf(Tables.documents(Sessions.composed(spark), dir))
 
   /** The quality-keeper variant: stage 2 is near-dup clustering over the
     * gated corpus (simhash banded-Hamming pairs → [[Dedup.dupClusters]])
@@ -130,7 +100,7 @@ object PrepPipeline {
   }
 
   def manifestClean(spark: SparkSession, dir: String): DataFrame =
-    manifestCleanOf(Tables.documents(prepSession(spark), dir))
+    manifestCleanOf(Tables.documents(Sessions.composed(spark), dir))
 
   /** The full curation chain — the Lee-et-al + FineWeb composition:
     * gate → SUBSTRING EXCISION ([[Dedup.substringCut]]: non-canonical
@@ -166,7 +136,7 @@ object PrepPipeline {
   }
 
   def manifestSemantic(spark: SparkSession, dir: String): DataFrame = {
-    val s = prepSession(spark)
+    val s = Sessions.composed(spark)
     manifestSemanticOf(Tables.documents(s, dir), Tables.embeddings(s, dir))
   }
 
@@ -217,7 +187,7 @@ object PrepPipeline {
   }
 
   def manifestTrain(spark: SparkSession, dir: String): DataFrame =
-    manifestTrainOf(Tables.documents(prepSession(spark), dir))
+    manifestTrainOf(Tables.documents(Sessions.composed(spark), dir))
 
   /** The TRAINING-READY view — the list the training loader actually
     * consumes, where the manifest variants stop at bookkeeping: the
@@ -266,7 +236,7 @@ object PrepPipeline {
   }
 
   def manifestTok(spark: SparkSession, dir: String): DataFrame =
-    manifestTokOf(Tables.documents(prepSession(spark), dir))
+    manifestTokOf(Tables.documents(Sessions.composed(spark), dir))
 
   /** The training-ready view packed by REAL tokenizer counts —
     * `pipe_prep_tok`, the v5 composition that closes the loop between
@@ -313,7 +283,7 @@ object PrepPipeline {
   }
 
   def manifestDsir(spark: SparkSession, dir: String): DataFrame =
-    manifestDsirOf(Tables.documents(prepSession(spark), dir))
+    manifestDsirOf(Tables.documents(Sessions.composed(spark), dir))
 
   /** The v6 composition — the curation chain ending in the IMPORTANCE
     * GATE (`mix_dsir`) instead of a quality heuristic: the pipe_prep
@@ -358,7 +328,7 @@ object PrepPipeline {
   }
 
   def manifestMm(spark: SparkSession, dir: String): DataFrame = {
-    val s = prepSession(spark)
+    val s = Sessions.composed(spark)
     // the same ascii guard every multimodal oracle face carries: the
     // DuckDB mirror replays the payload dHash on the text side
     manifestMmOf(s, Multimodal.asciiParityGuard(Tables.documents(s, dir)))
@@ -415,7 +385,7 @@ object PrepPipeline {
   }
 
   def manifestIncr(spark: SparkSession, dir: String): DataFrame =
-    manifestIncrOf(Tables.documents(prepSession(spark), dir))
+    manifestIncrOf(Tables.documents(Sessions.composed(spark), dir))
 
   /** The v8 composition — INCREMENTAL re-crawl curation
     * (`pipe_prep_incr`): the nightly shape, where curation runs over the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Sessions, Tables}
 
 /** Similarity search over the `embeddings` table (north star: ANN over an
   * `Array[Float]` embedding column).
@@ -397,26 +397,6 @@ object Similarity {
   def annIvfPrefilteredQuery(spark: SparkSession, dir: String): DataFrame =
     annIvfPrefiltered(spark, dir).orderBy("q_id", "rank")
 
-  /** Run a driver-side model-parameter job (the fixed-round training
-    * loops' tiny per-round aggregates) with adaptive query execution OFF:
-    * AQE materializes every shuffle stage as its OWN Spark job, so each
-    * Lloyd/power round paid two scheduler round-trips for an aggregate
-    * whose result is nLists×dims cells — there is nothing to adapt, and
-    * under a contended scheduler every extra sequential job is another
-    * queue wait (the r13 amplification mechanism, VERDICT r13 #2).
-    * Results are identical; only the per-round job count halves.
-    * Session-conf toggle restored in finally; the training loops are
-    * single-threaded driver code, so the scoping is race-free. */
-  private def withAqeOff[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Hash-sampled IVF centroid seeds to the driver: nLists × dims
     * doubles — model-parameter-sized, embedded as plan literals exactly
     * like fitted ridge weights, so nearest-list ASSIGNMENT is a pure
@@ -603,21 +583,12 @@ object Similarity {
     if (rdd.getNumPartitions <= FitTreeCombineAt) rdd.aggregate(z)(seqOp, combOp)
     else rdd.treeAggregate(z)(seqOp, combOp)
 
-  /** Storage level for the training-fit corpus caches (ADVICE r18 /
-    * OPTIMIZATION r19): serialized storage halves the JVM object
-    * overhead of caching the corpus during a fit — the right trade at
-    * 100 TB scale, where the deserialized object cache would be the
-    * dominant fit-time memory consumer — but it is NOT free: an A/B on
-    * the idle bench host measured the per-round deserialization at
-    * +0.5–0.9 s per coded training query at sf0.1 (sq8 3.7 → 4.6 s,
-    * pq 3.5 → 4.1, opq 3.9 → 4.2). Scale-dependent ⇒ deployment conf
-    * (`graft.fit.cacheSer=true`), local default stays the deserialized
-    * cache so the driver's bench stays comparable; MEMORY_AND_DISK
-    * spills rather than OOMs either way. */
-  private def fitCacheLevel(df: DataFrame): org.apache.spark.storage.StorageLevel =
-    if (df.sparkSession.conf.getOption("graft.fit.cacheSer").contains("true"))
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  /** Storage level for the training-fit corpus caches: deserialized.
+    * Serialized storage halves the cache's JVM object overhead, but an A/B
+    * at sf0.1 measured +0.5–0.9 s of per-round deserialization per coded
+    * training query (sq8 3.7 → 4.6 s, pq 3.5 → 4.1, opq 3.9 → 4.2).
+    * MEMORY_AND_DISK spills rather than OOMs. */
+  private val FitCacheLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   private def vecsRdd(emb: DataFrame): org.apache.spark.rdd.RDD[Array[Double]] =
     emb.select(col("e")).rdd.map { r =>
@@ -639,7 +610,7 @@ object Similarity {
     // EXECUTED, not what they compute.
     val dims = cent0.head._2.length
     val vecs = vecsRdd(emb)
-    vecs.persist(fitCacheLevel(emb))
+    vecs.persist(FitCacheLevel)
     var cent = cent0
     for (_ <- 0 until rounds) {
       val cl = cent
@@ -714,7 +685,7 @@ object Similarity {
     // QUERY-time penalized assignment stays the DataFrame column.
     val dims = cent0.head._2.length
     val vecs = vecsRdd(emb)
-    vecs.persist(fitCacheLevel(emb))
+    vecs.persist(FitCacheLevel)
     var cent = cent0
     var pen: Map[Long, Long] = cent0.map(_._1 -> 0L).toMap
     for (_ <- 0 until rounds) {
@@ -1150,17 +1121,10 @@ object Similarity {
                 depth: Int = 12, nLists: Int = 16, nProbe: Int = 4,
                 lamC: Int = 7, served: Boolean = true): DataFrame = {
     require(lamC >= 0 && lamC <= 10, "lamC is the integer-tenths relevance weight")
-    // Whole-query AQE-off via a session CLONE (VERDICT r13 #2): past the
-    // probe join every MMR frame is workload-sized (≤|Q|·depth²), and the
-    // lazily-checkpointed greedy rounds execute under the CALLER's final
-    // action where a scoped conf toggle cannot reach — adaptive execution
-    // would materialize each round's exchanges as separate sequential
-    // jobs with nothing to adapt at this size, the exact shape host
-    // contention amplifies. The clone shares the context, cache manager,
-    // extensions, and artifact registry; results are identical (measured:
-    // same rows, ~60% fewer jobs per run).
-    val s = spark.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", "false")
+    // Sessions.composed: the lazily-checkpointed greedy rounds run under
+    // the caller's final action, where AQE would materialize each round's
+    // exchanges as separate sequential jobs (~60% more jobs per run)
+    val s = Sessions.composed(spark)
     val (cand, pairs) = mmrCandidates(s, dir, nQueries, depth, nLists, nProbe, served)
     mmrGreedy(cand, pairs, kSel, lamC)
   }
@@ -1195,11 +1159,9 @@ object Similarity {
     // Dedup.materialized: |Q|·depth rows, read by every greedy round AND
     // by both sides of the pairs self-join below — stays EAGER, because
     // an unpopulated cache under a self-join re-runs the corpus-scale IVF
-    // probe chain once per concurrent side (the measured 4× hazard).
-    // AQE off for the materialization: every frame past the probe join is
-    // workload-sized, so adaptive per-stage jobs are pure scheduler tax
+    // probe chain once per concurrent side (the measured 4× hazard)
     cand.cache()
-    withAqeOff(spark) { cand.count() }
+    cand.count()
     val pairs = cand.select(col("q_id"), col("n_id").as("a_id"), col("e").as("ae"))
       .join(cand.select(col("q_id"), col("n_id").as("b_id"), col("e").as("be")), Seq("q_id"))
       .where(col("a_id") =!= col("b_id"))
@@ -1211,7 +1173,7 @@ object Similarity {
     // broadcast at once (measured +1 s at sf0.1) — the one extra action
     // is cheaper than the duplicate cosine passes it prevents
     pairs.cache()
-    withAqeOff(spark) { pairs.count() }
+    pairs.count()
     (cand.drop("e"), pairs)
   }
 
@@ -1232,9 +1194,10 @@ object Similarity {
     for (r <- 2 to kSel) {
       // selIds (≤|Q|·r rows) and pen (≤|Q|·depth rows) are workload-sized
       // BY CONSTRUCTION — broadcast them explicitly: the greedy loop runs
-      // under an AQE-off session (see mmrRerank), so there is no runtime
-      // broadcast conversion to fall back on, and a static sort-merge
-      // plan here would shuffle the cached candidate frame per round
+      // on mmrRerank's Sessions.composed clone (AQE off), so there is no
+      // runtime broadcast conversion to fall back on, and a static
+      // sort-merge plan here would shuffle the cached candidate frame per
+      // round
       val selIds = out.select(col("q_id"), col("n_id"))
       val pen = pairs.join(broadcast(selIds.withColumnRenamed("n_id", "b_id")),
           Seq("q_id", "b_id"))
@@ -1378,7 +1341,7 @@ object Similarity {
         val s = r.getSeq[Long](0); val a = new Array[Long](dims)
         var j = 0; while (j < dims) { a(j) = s(j); j += 1 }; a
       }
-    qRdd.persist(fitCacheLevel(emb))
+    qRdd.persist(FitCacheLevel)
     val (n, sums) = fitAggregate(qRdd, (0L, new Array[Long](dims)))(
       { case ((c, s), q) =>
         var j = 0; while (j < dims) { s(j) += q(j); j += 1 }; (c + 1, s) },
@@ -2168,7 +2131,7 @@ object Similarity {
       val s = r.getSeq[Double](0); val a = new Array[Double](s.length)
       var i = 0; while (i < s.length) { a(i) = s(i); i += 1 }; a
     }
-    vecs.persist(fitCacheLevel(emb))
+    vecs.persist(FitCacheLevel)
     var cb = cb0
     for (_ <- 0 until rounds) {
       val cbL = cb
@@ -3411,13 +3374,12 @@ object Similarity {
     // OPTIMIZATION r19 (guide §1.2 + §2.6): the eval composes NINE
     // independent serving chains plus two exact ground truths. Two
     // execution-only changes, rows untouched:
-    //  - AQE-off session CLONE (the mmrRerank / prepSession recipe):
-    //    under AQE every shuffle stage of every rung materialized as its
-    //    own sequential blocking job — Profile measured 165 jobs / 12 s
-    //    wall for ONE eval at sf0.1, nearly all sub-second stage jobs.
-    //    The static plan runs the whole 11-subtree union as one job with
-    //    full inter-rung parallelism. Every join in the chains carries an
-    //    explicit broadcast() hint, so no runtime demotion is lost.
+    //  - Sessions.composed: under AQE every shuffle stage of every rung
+    //    materialized as its own sequential blocking job (165 jobs / 12 s
+    //    wall for ONE eval at sf0.1). The static plan runs the whole
+    //    11-subtree union as one job with full inter-rung parallelism.
+    //    Every join in the chains carries an explicit broadcast() hint, so
+    //    no runtime demotion is lost.
     //  - the rung frames are CONSTRUCTED concurrently (guide §2.6:
     //    overlap independent jobs): each serving face eagerly collects
     //    its model parameters (centroids/codebooks/perm — tiny parquet
@@ -3426,16 +3388,7 @@ object Similarity {
     // Each frame's content is a pure function of the artifacts, so
     // construction order cannot change any row (the oracle replays the
     // same SQL).
-    val s = spark.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    // static width sized like prepSession: every post-scan frame here is
-    // workload-sized (nQ·k rows per rung; the probe windows partition by
-    // 10 q_ids), and eleven chains run concurrently — 8 partitions per
-    // stage keeps the executor pool full without 32-task scheduling per
-    // tiny stage. Deployment keeps the parent session's width via the
-    // same graft.prep.* knobs the prep family uses.
-    s.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.getOption("graft.prep.partitions").getOrElse("8"))
+    val s = Sessions.composed(spark)
     def tagged(rung: String, df: DataFrame): DataFrame =
       df.select(lit(rung).as("rung"), col("q_id"), col("rank"), col("n_id"))
     // every rung enters through its SERVED face — row-identical to the

@@ -1,0 +1,65 @@
+package graft
+
+import java.io.File
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.analytics.{Dedup, GraphRank, PrepPipeline, Similarity}
+
+/** The composed queries run on their own [[Sessions.composed]] clone (AQE
+  * off, width 8), and no query writes the conf of the session it was
+  * handed. */
+class ComposedSessionSpec extends SparkSpec {
+
+  private val composedQueries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "PrepPipeline.manifest" -> PrepPipeline.manifest,
+    "PrepPipeline.manifestSemantic" -> PrepPipeline.manifestSemantic,
+    "GraphRank.pagerankQuery" -> ((s, d) => GraphRank.pagerankQuery(s, d)),
+    "Similarity.knnEvalQuery" -> Similarity.knnEvalQuery,
+    "Similarity.mmrRerank" -> ((s, d) => Similarity.mmrRerank(s, d)))
+
+  /** Runs `body` and asserts the caller's conf map is the one taken before. */
+  private def leavesConf(body: => Unit): Unit = {
+    val before = spark.conf.getAll
+    body
+    assert(spark.conf.getAll == before, "the caller's session conf changed")
+  }
+
+  composedQueries.foreach { case (name, query) =>
+    test(s"$name runs on an AQE-off, width-8 clone and leaves the caller's conf") {
+      leavesConf {
+        val df = query(spark, sfDir)
+        val s = df.sparkSession
+        assert(s ne spark, "the result runs on the caller's session")
+        assert(s.conf.get("spark.sql.adaptive.enabled") == "false")
+        assert(s.conf.get("spark.sql.shuffle.partitions") == "8")
+        assert(df.collect().nonEmpty)
+      }
+    }
+  }
+
+  test("Dedup.dupClusters' distributed rounds leave the caller's conf") {
+    val corpus = Tables.documents(spark, sfDir)
+    leavesConf {
+      assert(Dedup.dupClusters(corpus, Dedup.simhashPairs(corpus), localEdgeLimit = -1L)
+        .collect().nonEmpty)
+    }
+  }
+
+  test("only Sessions makes a session clone; only Sessions and Explain set a conf") {
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"${root.getAbsolutePath} is not a directory")
+    def files(d: File): Seq[File] = d.listFiles().toSeq.flatMap { f =>
+      if (f.isDirectory) files(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+    val hits = for {
+      f <- files(root)
+      src = scala.io.Source.fromFile(f, "UTF-8")
+      (line, i) <- try src.getLines().toList.zipWithIndex finally src.close()
+      if (line.contains("newSession()") && f.getName != "Sessions.scala") ||
+        ((line.contains(".conf.set(") || line.contains(".conf.unset(")) &&
+          !Set("Sessions.scala", "Explain.scala")(f.getName))
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+}
