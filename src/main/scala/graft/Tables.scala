@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Central loader for the driver-provided parquet tables
   * (`/root/repo/TESTDATA.md`). All queries load through here so that
@@ -12,8 +14,55 @@ object Tables {
   val TpchTables: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part", "orders", "lineitem")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = scan(spark, dir, name)._1
+
+  /** One memo entry per table path, JVM-wide: Spark's own inferred schema
+    * and the row-group count from the footers, valid while its stamp holds.
+    * Spark's parquet inference runs one job per load, even for one file; a
+    * load given the memoized schema runs none.
+    *  - The stamp is each leaf file under the path as (path, length, mtime),
+    *    so a file or output directory overwritten in place is inferred
+    *    again, plus the session's inference-shaping confs
+    *    (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`,
+    *    `spark.sql.caseSensitive`). Execution confs are not in it, so a
+    *    [[Sessions.composed]] clone hits its parent's entry.
+    *  - A new stamp replaces the path's entry, so the memo holds one entry
+    *    per distinct path however often the path is overwritten. */
+  private final case class Resolved(stamp: Stamp, schema: StructType, rowGroups: Int)
+  private type Stamp = (Seq[(String, Long, Long)], Map[String, String])
+  private val resolved = scala.collection.concurrent.TrieMap[String, Resolved]()
+
+  /** Paths with a memo entry, for specs. */
+  private[graft] def resolvedPaths: Iterable[String] = resolved.keys
+
+  private def stamp(spark: SparkSession, path: Path): Stamp = {
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leaves(st: FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    (leaves(fs.getFileStatus(path)).sorted, spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k == "spark.sql.caseSensitive" })
+  }
+
+  /** The table's DataFrame and its row-group count, through the memo. */
+  private def scan(spark: SparkSession, dir: String, name: String): (DataFrame, Int) = {
+    val path = s"$dir/$name.parquet"
+    val st = stamp(spark, new Path(path))
+    val r = resolved.get(path).filter(_.stamp == st).getOrElse {
+      val df = spark.read.parquet(path)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val groups = df.inputFiles.map { f =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), conf)
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try reader.getFooter.getBlocks.size finally reader.close()
+      }.sum
+      val fresh = Resolved(st, df.schema, groups)
+      resolved.put(path, fresh)
+      fresh
+    }
+    (spark.read.schema(r.schema).parquet(path), r.rowGroups)
+  }
 
   /** The driver's parquet files each ship as ONE row group, so the scan
     * delivers a single POPULATED partition no matter how it is split —
@@ -24,31 +73,11 @@ object Tables {
     * GROUP count from the parquet footers (not the scan's byte-range
     * split count, which over-reports: a split is populated only if a row
     * group starts inside it), so a real corpus with many row groups/files
-    * already scans wide and this is a no-op. Footers are read once per
-    * file on the driver and memoized. */
-  /** Memo key includes (modificationTime, length) so a file OVERWRITTEN at
-    * the same path (regenerated test data in a long-lived session) gets a
-    * fresh footer read instead of a stale row-group count; the status
-    * lookup is one driver-side RPC per file, far cheaper than the footer
-    * parse it guards. */
-  private val rowGroupCache = scala.collection.concurrent.TrieMap[(String, Long, Long), Int]()
-
-  private def rowGroups(spark: SparkSession, df: DataFrame): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    df.inputFiles.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      val st = p.getFileSystem(conf).getFileStatus(p)
-      rowGroupCache.getOrElseUpdate((f, st.getModificationTime, st.getLen), {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter.getBlocks.size finally r.close()
-      })
-    }.sum
-  }
-
-  private def spread(spark: SparkSession, df: DataFrame): DataFrame = {
+    * already scans wide and this is a no-op. */
+  private def spread(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val (df, rowGroups) = scan(spark, dir, name)
     val target = spark.sparkContext.defaultParallelism
-    if (rowGroups(spark, df) * 2 < target) df.repartition(target) else df
+    if (rowGroups * 2 < target) df.repartition(target) else df
   }
 
   def region(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "region")
@@ -56,10 +85,10 @@ object Tables {
   def customer(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "customer")
   def supplier(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "supplier")
   def part(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "part")
-  def orders(spark: SparkSession, dir: String): DataFrame   = spread(spark, load(spark, dir, "orders"))
-  def lineitem(spark: SparkSession, dir: String): DataFrame = spread(spark, load(spark, dir, "lineitem"))
-  def documents(spark: SparkSession, dir: String): DataFrame = spread(spark, load(spark, dir, "documents"))
-  def embeddings(spark: SparkSession, dir: String): DataFrame = spread(spark, load(spark, dir, "embeddings"))
+  def orders(spark: SparkSession, dir: String): DataFrame   = spread(spark, dir, "orders")
+  def lineitem(spark: SparkSession, dir: String): DataFrame = spread(spark, dir, "lineitem")
+  def documents(spark: SparkSession, dir: String): DataFrame = spread(spark, dir, "documents")
+  def embeddings(spark: SparkSession, dir: String): DataFrame = spread(spark, dir, "embeddings")
 
   /** `events.parquet` has shipped with two timestamp layouts across
     * driver generations: INT64 TIMESTAMP(NANOS) (which Spark's parquet
@@ -73,7 +102,7 @@ object Tables {
     * µs), and a proper TimestampType `ts` (the session runs UTC, so the
     * NTZ→TZ cast is wall-clock-exact). */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spread(spark, load(spark, dir, "events"))
+    val raw = spread(spark, dir, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumnRenamed("ts", "ts_ns")

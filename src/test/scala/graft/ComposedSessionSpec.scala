@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.analytics.{Dedup, GraphRank, PrepPipeline, Similarity}
 
 /** The composed queries run on their own [[Sessions.composed]] clone (AQE
-  * off, width 8), and no query writes the conf of the session it was
-  * handed. */
+  * off, width 8), no query writes the conf of the session it was handed,
+  * and only [[Tables]] reads a driver table file. */
 class ComposedSessionSpec extends SparkSpec {
 
   private val composedQueries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
@@ -46,20 +46,35 @@ class ComposedSessionSpec extends SparkSpec {
     }
   }
 
-  test("only Sessions makes a session clone; only Sessions and Explain set a conf") {
+  /** `src/main` lines, as `path:line: text`, that `hit` selects by file name and text. */
+  private def sourceHits(hit: (String, String) => Boolean): Seq[String] = {
     val root = new File("src/main/scala")
     assert(root.isDirectory, s"${root.getAbsolutePath} is not a directory")
     def files(d: File): Seq[File] = d.listFiles().toSeq.flatMap { f =>
       if (f.isDirectory) files(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     }
-    val hits = for {
+    for {
       f <- files(root)
       src = scala.io.Source.fromFile(f, "UTF-8")
       (line, i) <- try src.getLines().toList.zipWithIndex finally src.close()
-      if (line.contains("newSession()") && f.getName != "Sessions.scala") ||
-        ((line.contains(".conf.set(") || line.contains(".conf.unset(")) &&
-          !Set("Sessions.scala", "Explain.scala")(f.getName))
+      if hit(f.getName, line)
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+  }
+
+  test("only Sessions makes a session clone; only Sessions and Explain set a conf") {
+    val hits = sourceHits { (file, line) =>
+      (line.contains("newSession()") && file != "Sessions.scala") ||
+        ((line.contains(".conf.set(") || line.contains(".conf.unset(")) &&
+          !Set("Sessions.scala", "Explain.scala")(file))
+    }
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("only Tables names a driver table file, so every load goes through its schema memo") {
+    // a string literal ending in `<table>.parquet` or `$<name>.parquet`
+    val tableFile = ("\"[^\"]*(\\$\\{?\\w+\\}?|\\b(" + Tables.TpchTables.mkString("|") +
+      "|events|documents|embeddings))\\.parquet\"").r
+    val hits = sourceHits((file, line) => file != "Tables.scala" && tableFile.findFirstIn(line).isDefined)
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 }
