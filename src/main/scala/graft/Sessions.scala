@@ -70,20 +70,26 @@ object Sessions {
   }
 
   /** The execution policy of the composed queries (the prep chain,
-    * PageRank, the kNN eval, MMR): a lazy clone of `spark` with adaptive
-    * execution off and a static shuffle width of 8. The clone shares the
-    * context, catalog, cache manager, extensions and (see above) generated
-    * classes; only its SQL conf is its own, so the caller's session is
-    * never written.
+    * PageRank, the kNN eval, MMR, and every IVF-family `knn_ann_*` /
+    * `knn_range_search` query with its index build): a lazy clone of
+    * `spark` with adaptive execution off and a static shuffle width of
+    * `min(8, defaultParallelism)`. The clone shares the context, catalog,
+    * cache manager, extensions and (see above) generated classes; only its
+    * SQL conf is its own, so the caller's session is never written.
     *  - AQE off: these queries run eager inter-stage actions and iterative
     *    rounds, and AQE materializes every shuffle stage of each as its
     *    own sequential blocking job, a re-queue point under host load. At
     *    sf0.1 `pipe_prep_semantic` ran 94 jobs with AQE and 23 without,
     *    PageRank's 10 rounds 58 jobs and one, a kNN eval 165. Rows are
     *    oracle-pinned identical.
-    *  - width 8: past their scans these frames are workload-sized (ids,
-    *    digests, ranks, nQ·k rows), so a core-count width spends each
-    *    stage on task scheduling.
+    *  - width 8 at most: past their scans these frames are workload-sized
+    *    (ids, digests, ranks, nQ·k rows), so a core-count width on a large
+    *    host spends each stage on task scheduling.
+    *  - width no more than the context's default parallelism (its core
+    *    count in local mode): on fewer than 8 cores a width of 8 runs two
+    *    task waves per stage. `knn_mmr` at sf0.01 on 4 cores took 3.08 s
+    *    at width 8 and 2.36 s at width 4. The rule reads a value the
+    *    context already has, so there is no option to set.
     *  - the cost: AQE's small-data conveniences are lost (runtime
     *    broadcast of the id-keeper joins, coalescing of tiny shuffles),
     *    about 1.4–1.6× wall on the prep family at sf0.1, and so is its
@@ -91,7 +97,8 @@ object Sessions {
   def composed(spark: SparkSession): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    s.conf.set("spark.sql.shuffle.partitions",
+      math.min(8, spark.sparkContext.defaultParallelism).toString)
     s
   }
 }

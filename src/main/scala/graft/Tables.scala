@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -103,11 +103,14 @@ object Tables {
     * NTZ→TZ cast is wall-clock-exact). */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val raw = spread(spark, dir, "events")
+    // one projection per layout (each chained withColumn analyses a new
+    // Dataset): `ts` keeps its position, the derived columns follow
+    def normalized(ts: Column, added: Column*): DataFrame =
+      raw.select(raw.columns.toSeq.map(c => if (c == "ts") ts else raw(c)) ++ added: _*)
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
-        raw.withColumnRenamed("ts", "ts_ns")
-          .withColumn("ts_us", expr("ts_ns div 1000")) // integer div: ns exceeds double's 2^53
-          .withColumn("ts", timestamp_micros(col("ts_us")))
+        val tsUs = expr("ts div 1000") // integer div: ns exceeds double's 2^53
+        normalized(col("ts").as("ts_ns"), tsUs.as("ts_us"), timestamp_micros(tsUs).as("ts"))
       case _ =>
         // the NTZ→TZ cast interprets the wall clock in the SESSION time
         // zone: only UTC reproduces the oracle's epoch_us. Fail fast with
@@ -117,9 +120,8 @@ object Tables {
           "Tables.events needs spark.sql.session.timeZone=UTC to normalize " +
             "TIMESTAMP(MICROS) events deterministically - build the session " +
             "via graft.Sessions.local or set the conf before loading")
-        raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-          .withColumn("ts_us", unix_micros(col("ts")))
-          .withColumn("ts_ns", col("ts_us") * lit(1000L))
+        val ts = col("ts").cast(org.apache.spark.sql.types.TimestampType)
+        normalized(ts.as("ts"), unix_micros(ts).as("ts_us"), (unix_micros(ts) * lit(1000L)).as("ts_ns"))
     }
   }
 }

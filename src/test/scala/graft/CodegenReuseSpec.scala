@@ -35,6 +35,14 @@ class CodegenReuseSpec extends SparkSpec {
     assert(again == 0, s"second pipe_prep run compiled $again classes")
   }
 
+  test("a second knn_ann_ivf_pq run, on a fresh caller session, compiles no class") {
+    // each run builds its index on a new Sessions.composed clone of the
+    // session it is handed
+    run(spark, "knn_ann_ivf_pq")
+    val again = counted(run(spark.newSession(), "knn_ann_ivf_pq"))
+    assert(again == 0, s"second knn_ann_ivf_pq run compiled $again classes")
+  }
+
   test("a session clone reuses the classes its parent compiled") {
     run(spark, "q1_pricing_summary")
     val onClone = counted(run(spark.newSession(), "q1_pricing_summary"))

@@ -7,8 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.analytics.{Dedup, GraphRank, PrepPipeline, Similarity}
 
 /** The composed queries run on their own [[Sessions.composed]] clone (AQE
-  * off, width 8), no query writes the conf of the session it was handed,
-  * and only [[Tables]] reads a driver table file. */
+  * off, width `min(8, defaultParallelism)`; the test names say width 8,
+  * the cap for a host of 8 or more cores), no query writes the conf of
+  * the session it was handed, and only [[Tables]] reads a driver table
+  * file. */
 class ComposedSessionSpec extends SparkSpec {
 
   private val composedQueries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
@@ -16,7 +18,19 @@ class ComposedSessionSpec extends SparkSpec {
     "PrepPipeline.manifestSemantic" -> PrepPipeline.manifestSemantic,
     "GraphRank.pagerankQuery" -> ((s, d) => GraphRank.pagerankQuery(s, d)),
     "Similarity.knnEvalQuery" -> Similarity.knnEvalQuery,
-    "Similarity.mmrRerank" -> ((s, d) => Similarity.mmrRerank(s, d)))
+    "Similarity.mmrRerank" -> ((s, d) => Similarity.mmrRerank(s, d)),
+    // the IVF index family: inline builds, a served face, a lifecycle face
+    "Similarity.annIvfQuery" -> Similarity.annIvfQuery,
+    "Similarity.annIvfSq8Query" -> Similarity.annIvfSq8Query,
+    "Similarity.annIvfPqQuery" -> Similarity.annIvfPqQuery,
+    "Similarity.annIvfOpqQuery" -> Similarity.annIvfOpqQuery,
+    "Similarity.annIvfProjectedQuery" -> Similarity.annIvfProjectedQuery,
+    "Similarity.annIvfBalancedQuery" -> Similarity.annIvfBalancedQuery,
+    "Similarity.annIvfRangeQuery" -> Similarity.annIvfRangeQuery,
+    "Similarity.annIvfPqServedQuery" -> Similarity.annIvfPqServedQuery,
+    "Similarity.annIvfInsertServedQuery" -> Similarity.annIvfInsertServedQuery)
+
+  private def width: String = math.min(8, spark.sparkContext.defaultParallelism).toString
 
   /** Runs `body` and asserts the caller's conf map is the one taken before. */
   private def leavesConf(body: => Unit): Unit = {
@@ -32,7 +46,7 @@ class ComposedSessionSpec extends SparkSpec {
         val s = df.sparkSession
         assert(s ne spark, "the result runs on the caller's session")
         assert(s.conf.get("spark.sql.adaptive.enabled") == "false")
-        assert(s.conf.get("spark.sql.shuffle.partitions") == "8")
+        assert(s.conf.get("spark.sql.shuffle.partitions") == width)
         assert(df.collect().nonEmpty)
       }
     }
