@@ -529,7 +529,7 @@ object Bench {
     // / served-composition measurement is the serving cost alone. The
     // BUILD cost is still measured: it is exactly what the inline twins
     // (knn_ann_ivf_pq, knn_ann_ivf, …) pay in-plan every run.
-    graft.analytics.Similarity.ensureServingArtifacts(spark, sfDir)
+    graft.analytics.IvfIndex.ensureServingArtifacts(spark, sfDir)
     dropPersisted(spark)
     // host-speed calibration (VERDICT r16 #2): one warmed sample before
     // the sweep; more are appended after the sweep and after the retry

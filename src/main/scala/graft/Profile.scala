@@ -45,7 +45,7 @@ object Profile {
     spark.range(1000).selectExpr("id % 7 as k", "id as v")
       .groupBy("k").count().write.format("noop").mode("overwrite").save()
     Tables.region(spark, sfDir).write.format("noop").mode("overwrite").save()
-    graft.analytics.Similarity.ensureServingArtifacts(spark, sfDir)
+    graft.analytics.IvfIndex.ensureServingArtifacts(spark, sfDir)
     val passes = sys.env.get("SPARK_GRAFT_PASSES").flatMap(_.toIntOption).getOrElse(1)
     names.foreach { n =>
       val fn = SparkEntry.queries(n)

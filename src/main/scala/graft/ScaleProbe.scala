@@ -204,15 +204,10 @@ object ScaleProbe {
           |  + ((cast(conv(substring(md5(concat('n:', cast(vec_id as string), ':', cast(d as string))), 1, 15), 16, 10) as long) % 2001) - 1000) / 4000.0D)""".stripMargin)
         .as("e"))
     emb.cache().count() // 3 refinement scans + 4 diagnostic scans read it
-    def centDf(cents: Array[(Long, Array[Double])]) = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        cents.toSeq.map { case (cid, ce) => org.apache.spark.sql.Row(cid, ce.toSeq) }, 1),
-      new org.apache.spark.sql.types.StructType()
-        .add("c_id", "long", nullable = false).add("ce", "array<double>"))
     // mean over the corpus of the best (rounded) cosine to any centroid —
     // higher = less quantization distortion at assignment time
     def meanAssignedCos(cents: Array[(Long, Array[Double])]): Double =
-      emb.join(broadcast(centDf(cents)), lit(true))
+      emb.join(broadcast(Similarity.centroidFrame(spark, cents)), lit(true))
         .groupBy("vec_id")
         .agg(max(round(Similarity.cosine(col("e"), col("ce")), 4)).as("c"))
         .agg(avg("c")).head().getDouble(0)
@@ -1365,7 +1360,7 @@ object ScaleProbe {
     // history axis), 1k-tick batches through the default config
     "streamhist" -> 100000L,
     // ivfingest: 1M-vector index + 100 one-file insert batches — the
-    // file-count regime where ivfCompact's motivation is measurable
+    // file-count regime where compaction's motivation is measurable
     "ivfingest" -> 1000000L,
     // dsir: 1M 40-word docs -> 40M word occurrences through the bucket
     // model and the weight aggregation; model stays 64 rows
@@ -1422,14 +1417,9 @@ object ScaleProbe {
           |  + ((cast(conv(substring(md5(concat('n:', cast(vec_id as string), ':', cast(d as string))), 1, 15), 16, 10) as long) % 2001) - 1000) / 4000.0D)""".stripMargin)
         .as("e"))
     emb.cache().count()
-    def centDf(cents: Array[(Long, Array[Double])]) = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        cents.toSeq.map { case (cid, ce) => org.apache.spark.sql.Row(cid, ce.toSeq) }, 1),
-      new org.apache.spark.sql.types.StructType()
-        .add("c_id", "long", nullable = false).add("ce", "array<double>"))
     def assignOver(frame: DataFrame, vecCol: String,
-                   cdf: org.apache.spark.sql.DataFrame): DataFrame =
-      frame.join(broadcast(cdf), lit(true))
+                   cents: Array[(Long, Array[Double])]): DataFrame =
+      frame.join(broadcast(Similarity.centroidFrame(spark, cents)), lit(true))
         .groupBy("vec_id")
         .agg(max(struct(round(Similarity.cosine(col(vecCol), col("ce")), 4).as("c"),
           (-col("c_id")).as("n"))).as("w"))
@@ -1451,12 +1441,12 @@ object ScaleProbe {
     //    the projected vectors ARE an index column), then every
     //    assignment/refinement/probe scan pays 16 dims instead of 64.
     val proj = Similarity.withProjection(emb, 64, 16).select(col("vec_id"), col("ep"))
-    val tFull = run(assignOver(emb, "e", centDf(cents)))
-    val tInline = run(assignOver(proj, "ep", centDf(cents16)))
+    val tFull = run(assignOver(emb, "e", cents))
+    val tInline = run(assignOver(proj, "ep", cents16))
     val (_, tBuild) = timed { proj.cache().count() }
-    val tAmort = run(assignOver(proj, "ep", centDf(cents16)))
-    val agree = assignOver(emb, "e", centDf(cents)).withColumnRenamed("list_id", "lf")
-      .join(assignOver(proj, "ep", centDf(cents16)).withColumnRenamed("list_id", "lp"),
+    val tAmort = run(assignOver(proj, "ep", cents16))
+    val agree = assignOver(emb, "e", cents).withColumnRenamed("list_id", "lf")
+      .join(assignOver(proj, "ep", cents16).withColumnRenamed("list_id", "lp"),
         "vec_id")
       .agg(avg(when(col("lf") === col("lp"), 1.0).otherwise(0.0))).head().getDouble(0)
     proj.unpersist()
@@ -1520,19 +1510,19 @@ object ScaleProbe {
   }
 
   /** INDEX-INGEST LIFECYCLE at probe volume (VERDICT r14 #5):
-    * [[graft.analytics.Similarity.ivfCompact]]'s motivation — "file-count
+    * [[graft.analytics.IvfIndex.compact]]'s motivation — "file-count
     * growth degrades scan planning long before data size does" — was
     * asserted, never measured. This arm builds a rounds-0 IVF index over
-    * `n` synthetic vectors, streams 100 [[Similarity.ivfInsert]] batches
+    * `n` synthetic vectors, streams 100 [[IvfIndex.insert]] batches
     * into it (one appended file each, the streaming-ingest shape),
     * measures SERVE latency at batch counts {0, 25, 50, 100}, compacts
-    * through the [[Similarity.ivfCompactIfNeeded]] trigger, then applies
+    * through the [[IvfIndex.compactIfNeeded]] trigger, then applies
     * a 10% tombstone mass and re-measures through the live anti-join and
     * after the tombstone-applying compaction. Correctness rides along:
     * the serving fingerprint is bit-stable across compaction (membership
     * set untouched), and no tombstoned id ever surfaces as a neighbor. */
   private def probeIvfIngest(spark: org.apache.spark.sql.SparkSession, n: Long): Boolean = {
-    import graft.analytics.Similarity
+    import graft.analytics.IvfIndex
     val batches = 100
     val batchSize = math.max(100L, n / 1000)
     def synth(from: Long, until: Long): DataFrame =
@@ -1547,42 +1537,42 @@ object ScaleProbe {
     full.count()
     val p = java.nio.file.Files.createTempDirectory("graft_ivfingest").toString
     val (_, tBuild) = timed {
-      Similarity.buildIvfIndexOf(spark, full.where(col("vec_id") < n), p,
-        nLists = 64, rounds = 0)
+      IvfIndex.build(spark, full.where(col("vec_id") < n), p, IvfIndex.Spec(nLists = 64))
     }
-    def serve(): Double = run(Similarity.annIvfServeOf(spark, full, p, nProbe = 8))
-    def fp(): Long = Similarity.annIvfServeOf(spark, full, p, nProbe = 8)
+    val idx = IvfIndex.open(spark, p)
+    def served(): DataFrame = idx.serve(full.where(col("vec_id") < 10), nProbe = 8,
+      corpus = Some(full))
+    def serve(): Double = run(served())
+    def fp(): Long = served()
       .agg(sum(col("q_id") * 1000003L + col("n_id") * 31L + col("rank"))).head().getLong(0)
-    val files0 = Similarity.ivfAssignFileCount(spark, p)
+    val files0 = idx.assignFileCount
     val tServe0 = serve()
     val serveAt = scala.collection.mutable.LinkedHashMap[Int, Double]()
     val (_, tIngest) = timed {
       var b = 0
       while (b < batches) {
-        Similarity.ivfInsert(spark, p,
-          synth(n + b * batchSize, n + (b + 1) * batchSize).coalesce(1))
+        idx.insert(synth(n + b * batchSize, n + (b + 1) * batchSize).coalesce(1))
         b += 1
         if (b == 25 || b == 50) serveAt(b) = serve()
       }
     }
-    val files100 = Similarity.ivfAssignFileCount(spark, p)
+    val files100 = idx.assignFileCount
     serveAt(100) = serve()
     val fpPre = fp()
     val (compacted, tCompact) = timed {
-      Similarity.ivfCompactIfNeeded(spark, p, maxFiles = 64, nFiles = 8)
+      idx.compactIfNeeded(maxFiles = 64, nFiles = 8)
     }
-    val filesC = Similarity.ivfAssignFileCount(spark, p)
+    val filesC = idx.assignFileCount
     val tServeC = serve()
     val fpPost = fp()
     // 10% tombstone mass over the ingested index
     val thr = graft.analytics.Similarity.InsertHashThreshold
     val h = graft.functions.Hashes.md5Long60(col("vec_id").cast("string"))
     val deleted = full.where(h >= lit(thr)).select("vec_id")
-    Similarity.ivfDelete(spark, p, deleted)
+    idx.delete(deleted)
     val tServeTomb = serve()
-    val leak = Similarity.annIvfServeOf(spark, full, p, nProbe = 8)
-      .join(deleted.withColumnRenamed("vec_id", "n_id"), "n_id").count()
-    Similarity.ivfCompact(spark, p, nFiles = 8)
+    val leak = served().join(deleted.withColumnRenamed("vec_id", "n_id"), "n_id").count()
+    idx.compact(nFiles = 8)
     val tServeTc = serve()
     full.unpersist()
     val ok = compacted && fpPre == fpPost && leak == 0L &&

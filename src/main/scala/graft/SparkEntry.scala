@@ -205,19 +205,19 @@ object SparkEntry {
     "knn_quantized" -> ((s: SparkSession, d: String) => Similarity.knnQuantized(s, d)), // SQ8 accuracy baseline (quadratic, like knn_exact)
     "knn_ann_ivf_sq8" -> (Similarity.annIvfSq8Query _), // IVF probing over SQ8-coded residents: the compressed-index serving path
     "knn_ann_ivf_pq" -> (Similarity.annIvfPqQuery _), // IVF + product quantization, ADC lookup-table scoring: the 64x-compressed serving path
-    "knn_ann_ivf_pq_served" -> (Similarity.annIvfPqServedQuery _), // the PQ rung through the persisted-artifact lifecycle: codebooks/codes/centroids/assign from files, no training in-plan
+    "knn_ann_ivf_pq_served" -> Similarity.annIvfServedQuery("pq"), // the PQ rung through the persisted-artifact lifecycle: codebooks/codes/centroids/assign from files, no training in-plan
     "knn_ann_ivf_opq" -> (Similarity.annIvfOpqQuery _), // OPQ: variance-balancing permutation rotation (parametric OPQ) before the identical IVF-PQ chain
-    "knn_ann_ivf_opq_served" -> (Similarity.annIvfOpqServedQuery _), // the OPQ rung served from files incl. the stored rotation; queries rotate by the artifact, never refit
-    "knn_ann_ivf_sq8_served" -> (Similarity.annIvfSq8ServedQuery _), // the SQ8 rung served from its persisted codes/centroids/assign artifacts: no quantize pass in-plan
-    "knn_ann_ivf_ins_served" -> (Similarity.annIvfInsertServedQuery _), // the ingest lifecycle: base build + incremental insert by the stored rule + compaction, served; must equal the fresh full index
-    "knn_ann_ivf_del_served" -> (Similarity.annIvfDeleteServedQuery _), // the delete lifecycle: full build + tombstoned high-hash tenth, served through the live anti-join path
+    "knn_ann_ivf_opq_served" -> Similarity.annIvfServedQuery("opq"), // the OPQ rung served from files incl. the stored rotation; queries rotate by the artifact, never refit
+    "knn_ann_ivf_sq8_served" -> Similarity.annIvfServedQuery("sq8"), // the SQ8 rung served from its persisted codes/centroids/assign artifacts: no quantize pass in-plan
+    "knn_ann_ivf_ins_served" -> Similarity.annIvfServedQuery("ivf_ins"), // the ingest lifecycle: base build + incremental insert by the stored rule + compaction, served; must equal the fresh full index
+    "knn_ann_ivf_del_served" -> Similarity.annIvfServedQuery("ivf_del"), // the delete lifecycle: full build + tombstoned high-hash tenth, served through the live anti-join path
     "knn_ann_ivf_opq_pca" -> (Similarity.annIvfOpqPcaQuery _), // the PCA cascade rung (r17 #5): natural gate -> Householder-rotate by the integer-grid top PC and re-fit the allocation on the rotated basis -> identity; catches the oblique anisotropy no natural-dim permutation can
-    "knn_ann_ivf_opq_pca_served" -> (Similarity.annIvfOpqPcaServedQuery _), // the cascade through the persisted lifecycle: stored hw/perm artifacts transform queries (and ivfInsert arrivals), identical serving tail
+    "knn_ann_ivf_opq_pca_served" -> Similarity.annIvfServedQuery("opq_pca"), // the cascade through the persisted lifecycle: stored hw/perm artifacts transform queries (and inserted arrivals), identical serving tail
     "emb_householder" -> (Similarity.embHouseholderQuery _), // the rotation's exact-integer diagnostic: rs = q*den - w*num per (vector, dim) — hash-pins the PCA fit + Householder model cross-engine even where the cascade's gates refuse
-    "knn_ann_ivf_pq_ins_served" -> (Similarity.annIvfPqInsServedQuery _), // CODED ingest lifecycle (r17 #1): codebooks/centroids trained on the base, arrivals encoded at INSERT against the frozen model, compacted, served
-    "knn_ann_ivf_sq8_ins_served" -> (Similarity.annIvfSq8InsServedQuery _), // SQ8 ingest lifecycle: per-vector coding is model-free, centroid seeding base-scoped; arrivals quantize at insert exactly as a build pass would
-    "knn_ann_ivf_opq_ins_served" -> (Similarity.annIvfOpqInsServedQuery _), // OPQ ingest lifecycle: rotation FIT on the base and frozen; arrivals and queries rotate by the STORED perm, never refit
-    "knn_ann_ivf_proj_served" -> (Similarity.annIvfProjServedQuery _), // the projected rung served from its persisted transform/centroids/assign artifacts: stored sign matrix projects the queries, no corpus projection in-plan
+    "knn_ann_ivf_pq_ins_served" -> Similarity.annIvfServedQuery("pq_ins"), // CODED ingest lifecycle (r17 #1): codebooks/centroids trained on the base, arrivals encoded at INSERT against the frozen model, compacted, served
+    "knn_ann_ivf_sq8_ins_served" -> Similarity.annIvfServedQuery("sq8_ins"), // SQ8 ingest lifecycle: per-vector coding is model-free, centroid seeding base-scoped; arrivals quantize at insert exactly as a build pass would
+    "knn_ann_ivf_opq_ins_served" -> Similarity.annIvfServedQuery("opq_ins"), // OPQ ingest lifecycle: rotation FIT on the base and frozen; arrivals and queries rotate by the STORED perm, never refit
+    "knn_ann_ivf_proj_served" -> Similarity.annIvfServedQuery("proj"), // the projected rung served from its persisted transform/centroids/assign artifacts: stored sign matrix projects the queries, no corpus projection in-plan
     "q_ivf_list_stats" -> (Similarity.ivfListStatsQuery _), // index ops audit: per-list resident histogram from the persisted membership; oracle replays the rule from scratch = artifact-integrity gate
     "knn_eval" -> (Similarity.knnEvalQuery _), // retrieval-quality eval table: recall@k / MRR@k / NDCG@k per ANN rung vs the exact ground truth, all-integer metrics
     "dedup_embedding_exact" -> (Similarity.embeddingDupExactQuery _),
@@ -4466,7 +4466,7 @@ object SparkEntry {
     * refinement corpus, and the IVF centroid seeds — to the ingest
     * lifecycle's base split, while the ENCODE (codes/recon/lists) and
     * the query side stay full-corpus: exactly the train-once/add-forever
-    * contract [[graft.analytics.Similarity.ivfInsert]] implements for
+    * contract [[graft.analytics.IvfIndex.insert]] implements for
     * coded indexes, replayed from first principles. None = train on
     * everything (the plain rungs). */
   private def pqOracleSqlOver(dChain: String, trainPred: Option[String] = None): String = {

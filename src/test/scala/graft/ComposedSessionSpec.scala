@@ -7,10 +7,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.analytics.{Dedup, GraphRank, PrepPipeline, Similarity}
 
 /** The composed queries run on their own [[Sessions.composed]] clone (AQE
-  * off, width `min(8, defaultParallelism)`; the test names say width 8,
-  * the cap for a host of 8 or more cores), no query writes the conf of
-  * the session it was handed, and only [[Tables]] reads a driver table
-  * file. */
+  * off, host width `min(8, defaultParallelism)`), no query writes the
+  * conf of the session it was handed, only [[Tables]] reads a driver
+  * table file, and only [[graft.analytics.IvfIndex]] names an index
+  * artifact. */
 class ComposedSessionSpec extends SparkSpec {
 
   private val composedQueries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
@@ -27,8 +27,8 @@ class ComposedSessionSpec extends SparkSpec {
     "Similarity.annIvfProjectedQuery" -> Similarity.annIvfProjectedQuery,
     "Similarity.annIvfBalancedQuery" -> Similarity.annIvfBalancedQuery,
     "Similarity.annIvfRangeQuery" -> Similarity.annIvfRangeQuery,
-    "Similarity.annIvfPqServedQuery" -> Similarity.annIvfPqServedQuery,
-    "Similarity.annIvfInsertServedQuery" -> Similarity.annIvfInsertServedQuery)
+    "Similarity.annIvfServedQuery(pq)" -> Similarity.annIvfServedQuery("pq"),
+    "Similarity.annIvfServedQuery(ivf_ins)" -> Similarity.annIvfServedQuery("ivf_ins"))
 
   private def width: String = math.min(8, spark.sparkContext.defaultParallelism).toString
 
@@ -40,7 +40,7 @@ class ComposedSessionSpec extends SparkSpec {
   }
 
   composedQueries.foreach { case (name, query) =>
-    test(s"$name runs on an AQE-off, width-8 clone and leaves the caller's conf") {
+    test(s"$name runs on an AQE-off, host-width clone and leaves the caller's conf") {
       leavesConf {
         val df = query(spark, sfDir)
         val s = df.sparkSession
@@ -89,6 +89,14 @@ class ComposedSessionSpec extends SparkSpec {
     val tableFile = ("\"[^\"]*(\\$\\{?\\w+\\}?|\\b(" + Tables.TpchTables.mkString("|") +
       "|events|documents|embeddings))\\.parquet\"").r
     val hits = sourceHits((file, line) => file != "Tables.scala" && tableFile.findFirstIn(line).isDefined)
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("only IvfIndex names an index artifact, so every index read goes through open") {
+    val artifact =
+      "\"/(assign|centroids|codes|codebooks|perm|hw|proj|penalties|tombstones)\"".r
+    val hits = sourceHits((file, line) =>
+      file != "IvfIndex.scala" && artifact.findFirstIn(line).isDefined)
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 }

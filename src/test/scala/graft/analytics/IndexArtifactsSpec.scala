@@ -1,8 +1,10 @@
 package graft.analytics
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
+import graft.analytics.IvfIndex.{Codec, Spec, Transform}
 
 /** The persisted-artifact lifecycle for the REMAINING model-parameter
   * families (VERDICT r12 #4/#5 — [[IvfIndexSpec]] covers the flat/refined
@@ -25,17 +27,29 @@ class IndexArtifactsSpec extends SparkSpec {
   private def rows4(df: DataFrame): Set[(Long, Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
 
+  private def emb: DataFrame = Similarity.embeddingsD(spark, sfDir)
+
+  private def build(p: String, spec: Spec): Unit = IvfIndex.build(spark, emb, p, spec)
+
+  private def open(p: String): IvfIndex = IvfIndex.open(spark, p)
+
+  /** Top-5 of the first 10 corpus vectors, served from the index at `p`. */
+  private def serve(p: String): DataFrame = {
+    val e = emb
+    open(p).serve(e.where(col("vec_id") < 10), corpus = Some(e))
+  }
+
   // -- PQ --
 
   private lazy val pqPath: String = {
-    val p = tmp("pq"); Similarity.buildPqIndex(spark, sfDir, p); p
+    val p = tmp("pq"); build(p, Spec(codec = Codec.Pq)); p
   }
 
   test("PQ codebook artifact round-trips bit-exactly and rebuilds identically") {
-    val cb = Similarity.loadPqCodebooks(spark, pqPath)
+    val cb = open(pqPath).codebooks.get
     assert(cb.length === 16 && cb.forall(_.length === 16))
-    val p2 = tmp("pq2"); Similarity.buildPqIndex(spark, sfDir, p2)
-    val cb2 = Similarity.loadPqCodebooks(spark, p2)
+    val p2 = tmp("pq2"); build(p2, Spec(codec = Codec.Pq))
+    val cb2 = open(p2).codebooks.get
     cb.zip(cb2).foreach { case (ma, mb) =>
       ma.zip(mb).foreach { case (a, b) =>
         assert(java.util.Arrays.equals(a, b), "codewords must round-trip bit-exactly")
@@ -44,13 +58,13 @@ class IndexArtifactsSpec extends SparkSpec {
   }
 
   test("PQ serving from the artifact == inline annIvfPq, row for row") {
-    val served = rows4(Similarity.annIvfPqServe(spark, sfDir, pqPath))
+    val served = rows4(serve(pqPath))
     val inline = rows4(Similarity.annIvfPq(spark, sfDir))
     assert(served.nonEmpty && served === inline)
   }
 
   test("PQ serving plan carries no training or assignment expression") {
-    val plan = Similarity.annIvfPqServe(spark, sfDir, pqPath)
+    val plan = serve(pqPath)
       .queryExecution.executedPlan.toString
     assert(plan.contains("codes") && plan.contains("assign"),
       "serve must scan the persisted codes + membership")
@@ -68,27 +82,27 @@ class IndexArtifactsSpec extends SparkSpec {
   // -- OPQ --
 
   private lazy val opqPath: String = {
-    val p = tmp("opq"); Similarity.buildOpqIndex(spark, sfDir, p); p
+    val p = tmp("opq"); build(p, Spec(Transform.Perm, codec = Codec.Pq)); p
   }
 
   test("OPQ rotation artifact round-trips as a bijection and rebuilds identically") {
-    val perm = Similarity.loadOpqPerm(spark, opqPath)
+    val perm = open(opqPath).perm.get
     assert(perm.length === 64 && perm.toSet === (0 until 64).toSet,
       "the stored rotation must be a permutation of the 64 dims")
-    val p2 = tmp("opq2"); Similarity.buildOpqIndex(spark, sfDir, p2)
-    assert(java.util.Arrays.equals(perm, Similarity.loadOpqPerm(spark, p2)),
+    val p2 = tmp("opq2"); build(p2, Spec(Transform.Perm, codec = Codec.Pq))
+    assert(java.util.Arrays.equals(perm, open(p2).perm.get),
       "the fit is deterministic in its inputs")
   }
 
   test("OPQ serving from the artifact == inline annIvfOpq, row for row") {
-    val served = rows4(Similarity.annIvfOpqServe(spark, sfDir, opqPath))
+    val served = rows4(serve(opqPath))
     val inline = rows4(Similarity.annIvfOpq(spark, sfDir))
     assert(served.nonEmpty && served === inline)
     // the gate law on THIS corpus: subspace variances are balanced
     // within the 15% engagement bar, so the rotation is the identity
     // and the rung is bit-identical to plain PQ (the knn_eval rows are
     // equal by construction, not by luck)
-    val perm = Similarity.loadOpqPerm(spark, opqPath)
+    val perm = open(opqPath).perm.get
     if (perm.zipWithIndex.forall { case (d, i) => d == i })
       assert(served === rows4(Similarity.annIvfPq(spark, sfDir)),
         "identity rotation must reproduce the PQ rung exactly")
@@ -97,17 +111,17 @@ class IndexArtifactsSpec extends SparkSpec {
   // -- SQ8 --
 
   private lazy val sq8Path: String = {
-    val p = tmp("sq8"); Similarity.buildSq8Index(spark, sfDir, p); p
+    val p = tmp("sq8"); build(p, Spec(codec = Codec.Sq8)); p
   }
 
   test("SQ8 serving from the artifact == inline annIvfSq8, row for row") {
-    val served = rows4(Similarity.annIvfSq8Serve(spark, sfDir, sq8Path))
+    val served = rows4(serve(sq8Path))
     val inline = rows4(Similarity.annIvfSq8(spark, sfDir))
     assert(served.nonEmpty && served === inline)
   }
 
   test("SQ8 serving plan reads persisted codes, no quantize pass or assignment") {
-    val plan = Similarity.annIvfSq8Serve(spark, sfDir, sq8Path)
+    val plan = serve(sq8Path)
       .queryExecution.executedPlan.toString
     assert(plan.contains("codes") && plan.contains("assign"))
     assert(!plan.contains("array_max"),
@@ -121,24 +135,27 @@ class IndexArtifactsSpec extends SparkSpec {
 
   // -- balanced IVF (the penalty map IS part of the artifact) --
 
+  /** [[Similarity.annIvfBalanced]]'s defaults: 3 rounds at λ = 5000. */
+  private val Balanced = Spec(rounds = 3, balance = Some(5000L))
+
   test("balanced index: penalty map round-trips; served == inline; plan assignment-free") {
     val p = tmp("bal")
-    Similarity.buildBalancedIvfIndex(spark, sfDir, p)
-    val pen = Similarity.loadIvfPenalties(spark, p)
+    build(p, Balanced)
+    val pen = open(p).penalties.get
     assert(pen.size === 16 && pen.values.forall(_ >= 0L))
     // a rebuild reproduces centroids AND penalties bit-exactly
     val p2 = tmp("bal2")
-    Similarity.buildBalancedIvfIndex(spark, sfDir, p2)
-    assert(Similarity.loadIvfPenalties(spark, p2) === pen)
-    val c1 = Similarity.loadIvfCentroids(spark, p)
-    val c2 = Similarity.loadIvfCentroids(spark, p2)
+    build(p2, Balanced)
+    assert(open(p2).penalties.get === pen)
+    val c1 = open(p).centroids
+    val c2 = open(p2).centroids
     c1.zip(c2).foreach { case ((i1, a), (i2, b)) =>
       assert(i1 === i2 && java.util.Arrays.equals(a, b))
     }
-    val served = rows4(Similarity.annIvfBalancedServe(spark, sfDir, p))
+    val served = rows4(serve(p))
     val inline = rows4(Similarity.annIvfBalanced(spark, sfDir))
     assert(served.nonEmpty && served === inline)
-    val plan = Similarity.annIvfBalancedServe(spark, sfDir, p)
+    val plan = serve(p)
       .queryExecution.executedPlan.toString
     assert(plan.contains("assign") && !plan.contains("array_max"))
   }
@@ -151,25 +168,24 @@ class IndexArtifactsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val h = graft.functions.Hashes.md5Long60(col("vec_id").cast("string"))
     val p = tmp("ins")
-    Similarity.buildIvfIndexOf(spark,
-      embL.where(h < lit(Similarity.InsertHashThreshold)), p, nLists = 16, rounds = 0)
-    Similarity.ivfInsert(spark, p, embL.where(h >= lit(Similarity.InsertHashThreshold)))
+    IvfIndex.build(spark, embL.where(h < lit(Similarity.InsertHashThreshold)), p, Spec())
+    open(p).insert(embL.where(h >= lit(Similarity.InsertHashThreshold)))
     // the union membership equals a fresh full-corpus build's (the seed
     // set is contained in the base split by construction, so the stored
     // centroids are the full build's centroids)
     val p2 = tmp("insfull")
-    Similarity.buildIvfIndexOf(spark, embL, p2, nLists = 16, rounds = 0)
+    IvfIndex.build(spark, embL, p2, Spec())
     def assignRows(path: String) = spark.read.parquet(path + "/assign")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val a1 = assignRows(p)
     assert(a1.nonEmpty && a1 === assignRows(p2),
       "base+insert membership must equal the fresh rebuild's")
     // serving equality, and compaction is a pure file rewrite
-    val before = rows4(Similarity.annIvfServe(spark, sfDir, p))
-    Similarity.ivfCompact(spark, p)
+    val before = rows4(serve(p))
+    open(p).compact()
     assert(assignRows(p) === a1, "compaction must not change a membership row")
-    val after = rows4(Similarity.annIvfServe(spark, sfDir, p))
-    val fresh = rows4(Similarity.annIvfServe(spark, sfDir, p2))
+    val after = rows4(serve(p))
+    val fresh = rows4(serve(p2))
     assert(before.nonEmpty && before === after && before === fresh)
   }
 
@@ -179,48 +195,45 @@ class IndexArtifactsSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val h = graft.functions.Hashes.md5Long60(col("vec_id").cast("string"))
     val p = tmp("del")
-    Similarity.buildIvfIndexOf(spark, embL, p, nLists = 16, rounds = 0)
-    Similarity.ivfDelete(spark, p,
-      embL.where(h >= lit(Similarity.InsertHashThreshold)).select(col("vec_id")))
-    val served = rows4(Similarity.annIvfServe(spark, sfDir, p))
+    IvfIndex.build(spark, embL, p, Spec())
+    open(p).delete(embL.where(h >= lit(Similarity.InsertHashThreshold)).select(col("vec_id")))
+    val served = rows4(serve(p))
     // law 1: serving with live tombstones == a fresh index over the
     // survivors (same centroids — the seed set is all low-hash)
     val p2 = tmp("delsurv")
-    Similarity.buildIvfIndexOf(spark,
-      embL.where(h < lit(Similarity.InsertHashThreshold)), p2, nLists = 16, rounds = 0)
-    assert(served.nonEmpty && served === rows4(Similarity.annIvfServe(spark, sfDir, p2)))
+    IvfIndex.build(spark, embL.where(h < lit(Similarity.InsertHashThreshold)), p2, Spec())
+    assert(served.nonEmpty && served === rows4(serve(p2)))
     val deleted = embL.where(h >= lit(Similarity.InsertHashThreshold))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(deleted.nonEmpty && served.forall { case (_, nId, _, _) => !deleted(nId) },
       "a tombstoned id must never surface as a neighbor")
     // law 2: re-deleting / deleting a never-resident id is harmless
-    Similarity.ivfDelete(spark, p,
-      spark.range(999999L, 1000002L).select(col("id").as("vec_id")))
-    assert(rows4(Similarity.annIvfServe(spark, sfDir, p)) === served)
+    open(p).delete(spark.range(999999L, 1000002L).select(col("id").as("vec_id")))
+    assert(rows4(serve(p)) === served)
     // law 3: compaction applies tombstones physically and clears them
-    Similarity.ivfCompact(spark, p)
+    open(p).compact()
     val tombP = new org.apache.hadoop.fs.Path(p + "/tombstones")
     val fs = tombP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(tombP), "compaction must clear the tombstone artifact")
     val nAssign = spark.read.parquet(p + "/assign").count()
     val nSurvivors = embL.where(h < lit(Similarity.InsertHashThreshold)).count()
     assert(nAssign === nSurvivors, "compaction must drop tombstoned membership rows")
-    assert(rows4(Similarity.annIvfServe(spark, sfDir, p)) === served)
+    assert(rows4(serve(p)) === served)
   }
 
   test("insert into a balanced index assigns by the STORED penalized rule") {
     import org.apache.spark.sql.functions.col
     val p = tmp("balins")
-    Similarity.buildBalancedIvfIndex(spark, sfDir, p)
-    val cents = Similarity.loadIvfCentroids(spark, p)
-    val pen = Similarity.loadIvfPenalties(spark, p)
+    build(p, Balanced)
+    val cents = open(p).centroids
+    val pen = open(p).penalties.get
     val embL = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     // "late arrivals": existing vectors under fresh ids, so the expected
     // assignment is computable from the stored artifacts alone
     val nw = embL.where(col("vec_id") < 50)
       .select((col("vec_id") + 1000000L).as("vec_id"), col("e"))
-    Similarity.ivfInsert(spark, p, nw)
+    open(p).insert(nw)
     val got = spark.read.parquet(p + "/assign").where(col("vec_id") >= 1000000L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val want = nw.select(col("vec_id"),
@@ -245,15 +258,15 @@ class IndexArtifactsSpec extends SparkSpec {
 
   test("proj index: sign matrix round-trips; served == inline; corpus projection absent from the serving plan") {
     val p = tmp("proj")
-    Similarity.buildProjIndex(spark, sfDir, p)
+    build(p, Spec(Transform.Proj))
     // the persisted transform IS the generated ±1 JL matrix, row-exact
-    assert(Similarity.loadProjSigns(spark, p).map(_.toVector).toVector ===
+    assert(open(p).projection.get.map(_.toVector).toVector ===
       Similarity.rpSignMatrix(64, 16).map(_.toVector).toVector)
-    val served = rows4(Similarity.annIvfProjServe(spark, sfDir, p))
+    val served = rows4(serve(p))
     val inline = rows4(Similarity.annIvfProjected(spark, sfDir))
     assert(served.nonEmpty && served === inline,
       "serving from the proj artifacts must reproduce the inline-trained rung")
-    val plan = Similarity.annIvfProjServe(spark, sfDir, p)
+    val plan = serve(p)
       .queryExecution.executedPlan.toString
     assert(plan.contains("assign"), "serve must scan the persisted membership")
     assert(!plan.contains("array_max"),
@@ -276,22 +289,22 @@ class IndexArtifactsSpec extends SparkSpec {
     val donor = embL.where(col("vec_id") === 0L)
     val arrival = donor.select(lit(777777L).as("vec_id"), col("e"))
     val faces: Seq[(String, String => Unit)] = Seq(
-      "sq8" -> (p => Similarity.buildSq8IndexOf(spark, embL, p, nLists = 16)),
-      "pq" -> (p => Similarity.buildPqIndexOf(spark, embL, p, nLists = 16)),
-      "opq" -> (p => Similarity.buildOpqIndexOf(spark, embL, p, nLists = 16)))
+      "sq8" -> (p => IvfIndex.build(spark, embL, p, Spec(codec = Codec.Sq8))),
+      "pq" -> (p => IvfIndex.build(spark, embL, p, Spec(codec = Codec.Pq))),
+      "opq" -> (p => IvfIndex.build(spark, embL, p, Spec(Transform.Perm, codec = Codec.Pq))))
     faces.foreach { case (name, build) =>
       val p = tmp(s"codedins_$name")
       build(p)
-      Similarity.ivfInsert(spark, p, arrival)
-      def servedIds(): Set[Long] = Similarity.annIvfCodedServeOf(spark, p, donor, k = 5)
+      open(p).insert(arrival)
+      def servedIds(): Set[Long] = open(p).serve(donor, k = 5)
         .select("n_id").collect().map(_.getLong(0)).toSet
       assert(servedIds().contains(777777L),
         s"$name: the coded-inserted twin must surface in coded serving")
       // compaction rewrites codes + membership (tombstone-free here) and
       // must leave serving untouched
-      val before = rows4(Similarity.annIvfCodedServeOf(spark, p, donor, k = 5))
-      Similarity.ivfCompact(spark, p)
-      assert(rows4(Similarity.annIvfCodedServeOf(spark, p, donor, k = 5)) === before,
+      val before = rows4(open(p).serve(donor, k = 5))
+      open(p).compact()
+      assert(rows4(open(p).serve(donor, k = 5)) === before,
         s"$name: compaction must be invisible to coded serving")
     }
     // the PCA-OPQ face with a LIVE Householder artifact: the real corpus
@@ -311,7 +324,7 @@ class IndexArtifactsSpec extends SparkSpec {
         }.toSeq)
       }.toDF("vec_id", "e")
       val p = tmp("codedins_opqpca")
-      Similarity.buildOpqPcaIndexOf(spark, oblique, p, nLists = 16)
+      IvfIndex.build(spark, oblique, p, Spec(Transform.PcaCascade, codec = Codec.Pq))
       val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
       assert(fs.exists(new org.apache.hadoop.fs.Path(p + "/hw")),
@@ -320,7 +333,7 @@ class IndexArtifactsSpec extends SparkSpec {
       val arrival = donor.select(
         org.apache.spark.sql.functions.lit(777777L).as("vec_id"),
         org.apache.spark.sql.functions.col("e"))
-      Similarity.ivfInsert(spark, p, arrival)
+      open(p).insert(arrival)
       // the FAISS add contract, asserted directly: the twin's insert-time
       // encode through the STORED hw→perm chain must equal the donor's
       // build-time encode — identical code word in every subspace and the
@@ -337,20 +350,20 @@ class IndexArtifactsSpec extends SparkSpec {
         "opq_pca: the twin must assign to the donor's list by the stored rule")
       // and the twin is genuinely SERVABLE (the r14 hazard was arrivals
       // silently vanishing from coded serving)
-      val full = Similarity.annIvfCodedServeOf(spark, p, donor, k = 400)
+      val full = open(p).serve(donor, k = 400)
         .select("n_id").collect().map(_.getLong(0)).toSet
       assert(full.contains(777777L), "opq_pca: the twin must be a serving candidate")
-      val before = rows4(Similarity.annIvfCodedServeOf(spark, p, donor, k = 5))
-      Similarity.ivfCompact(spark, p)
-      assert(rows4(Similarity.annIvfCodedServeOf(spark, p, donor, k = 5)) === before,
+      val before = rows4(open(p).serve(donor, k = 5))
+      open(p).compact()
+      assert(rows4(open(p).serve(donor, k = 5)) === before,
         "opq_pca: compaction must be invisible to coded serving")
     }
     // the projected family's centroids live in projected space — a raw
     // full-dim insert would silently mis-assign, so it is refused still
     val pp = tmp("projins")
-    Similarity.buildProjIndex(spark, sfDir, pp)
+    build(pp, Spec(Transform.Proj))
     val e3 = intercept[IllegalArgumentException] {
-      Similarity.ivfInsert(spark, pp, embL.limit(1))
+      open(pp).insert(embL.limit(1))
     }
     assert(e3.getMessage.contains("proj"), s"proj index must be refused: ${e3.getMessage}")
   }
@@ -360,17 +373,17 @@ class IndexArtifactsSpec extends SparkSpec {
     val embL = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val p = tmp("stale")
-    Similarity.buildIvfIndexOf(spark, embL, p, nLists = 16, rounds = 0)
+    IvfIndex.build(spark, embL, p, Spec())
     val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(p + "/assign_old"))
-    intercept[IllegalArgumentException] { Similarity.ivfCompact(spark, p) }
+    intercept[IllegalArgumentException] { open(p).compact() }
     // the live membership was never touched by the refused compaction
     assert(spark.read.parquet(p + "/assign").count() ===
       graft.Tables.embeddings(spark, sfDir).count())
     fs.delete(new org.apache.hadoop.fs.Path(p + "/assign_old"), true)
-    Similarity.ivfCompact(spark, p) // clean state compacts fine
-    assert(rows4(Similarity.annIvfServe(spark, sfDir, p)).nonEmpty)
+    open(p).compact() // clean state compacts fine
+    assert(rows4(serve(p)).nonEmpty)
   }
 
   test("ivfCompactIfNeeded: no-op under the file threshold, compacts above it, serving invariant") {
@@ -378,25 +391,25 @@ class IndexArtifactsSpec extends SparkSpec {
     val embL = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val p = tmp("trigger")
-    Similarity.buildIvfIndexOf(spark, embL, p, nLists = 16, rounds = 0)
-    val before = rows4(Similarity.annIvfServe(spark, sfDir, p))
-    val f0 = Similarity.ivfAssignFileCount(spark, p)
+    IvfIndex.build(spark, embL, p, Spec())
+    val before = rows4(serve(p))
+    val f0 = open(p).assignFileCount
     assert(f0 > 0)
     // under threshold: untouched
-    assert(!Similarity.ivfCompactIfNeeded(spark, p, maxFiles = f0 + 10))
-    assert(Similarity.ivfAssignFileCount(spark, p) === f0)
+    assert(!open(p).compactIfNeeded(maxFiles = f0 + 10))
+    assert(open(p).assignFileCount === f0)
     // push the file count over with one-file insert batches of fresh ids
     (0 until 4).foreach { b =>
-      Similarity.ivfInsert(spark, p,
+      open(p).insert(
         embL.where(col("vec_id") < 10)
           .select((col("vec_id") + 5000000L + b * 100L).as("vec_id"), col("e"))
           .coalesce(1))
     }
-    assert(Similarity.ivfAssignFileCount(spark, p) >= f0 + 4)
-    assert(Similarity.ivfCompactIfNeeded(spark, p, maxFiles = f0 + 3, nFiles = 2))
-    assert(Similarity.ivfAssignFileCount(spark, p) <= 2)
+    assert(open(p).assignFileCount >= f0 + 4)
+    assert(open(p).compactIfNeeded(maxFiles = f0 + 3, nFiles = 2))
+    assert(open(p).assignFileCount <= 2)
     // original members' serving is untouched by the trigger's compaction
-    assert(rows4(Similarity.annIvfServe(spark, sfDir, p)) === before)
+    assert(rows4(serve(p)) === before)
   }
 
   // -- deep-BPE model --
@@ -448,5 +461,51 @@ class IndexArtifactsSpec extends SparkSpec {
     val inline = Similarity.contrastiveTriplets(spark, sfDir, served = false)
       .collect().map(_.toSeq).toSet
     assert(served.nonEmpty && served === inline)
+  }
+
+  // -- the one layout: open derives an index's parts from its directory --
+
+  test("every registered index opens to exactly the parts on disk and serves its query's rows") {
+    val ivf = Set("centroids", "assign")
+    val sq8 = ivf + "codes"
+    val pq = sq8 + "codebooks"
+    // (parts, the registered query the index answers). On this fixture
+    // the PCA cascade's rotated gate engages, so opq_pca stores the
+    // Householder model and its permutation; "ivf" backs the
+    // compositions and equals knn_ann_ivf.
+    val expected = Map(
+      "ivf" -> (ivf, "knn_ann_ivf"),
+      "pq" -> (pq, "knn_ann_ivf_pq_served"),
+      "opq" -> (pq + "perm", "knn_ann_ivf_opq_served"),
+      "opq_pca" -> (pq + "hw" + "perm", "knn_ann_ivf_opq_pca_served"),
+      "sq8" -> (sq8, "knn_ann_ivf_sq8_served"),
+      "proj" -> (ivf + "proj", "knn_ann_ivf_proj_served"),
+      "ivf_ins" -> (ivf, "knn_ann_ivf_ins_served"),
+      "pq_ins" -> (pq, "knn_ann_ivf_pq_ins_served"),
+      "sq8_ins" -> (sq8, "knn_ann_ivf_sq8_ins_served"),
+      "opq_ins" -> (pq + "perm", "knn_ann_ivf_opq_ins_served"),
+      "ivf_del" -> (ivf + "tombstones", "knn_ann_ivf_del_served"))
+    assert(IvfIndex.Registered.map(_._1).toSet === expected.keySet)
+    IvfIndex.Registered.foreach { case (name, spec, lifecycle) =>
+      val (parts, query) = expected(name)
+      val idx = IvfIndex.served(spark, sfDir, spec, lifecycle)
+      val dir = new org.apache.hadoop.fs.Path(idx.path)
+      val onDisk = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(dir).map(_.getPath.getName).toSet
+      assert(idx.parts === onDisk, s"$name: open must find exactly what is on disk")
+      assert(onDisk === parts, s"$name: $spec at $lifecycle")
+      val served = rows4(serve(idx.path))
+      assert(served.nonEmpty && served === rows4(graft.SparkEntry.queries(query)(spark, sfDir)),
+        s"$name: serving the opened index must reproduce $query")
+    }
+  }
+
+  test("open refuses a directory that is not an index, naming the path") {
+    val p = tmp("notidx")
+    val e = intercept[IllegalArgumentException](IvfIndex.open(spark, p))
+    assert(e.getMessage.contains(p), e.getMessage)
+    val absent = p + "/absent"
+    val e2 = intercept[IllegalArgumentException](IvfIndex.open(spark, absent))
+    assert(e2.getMessage.contains(absent), e2.getMessage)
   }
 }

@@ -99,8 +99,9 @@ class KnnEvalSpec extends SparkSpec {
     val embL = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val p = java.nio.file.Files.createTempDirectory("graft_evalsurv").toString
-    Similarity.buildIvfIndexOf(spark, embL.where(survPred), p, nLists = 16, rounds = 0)
-    val freshDel = Similarity.annIvfServe(spark, sfDir, p)
+    IvfIndex.build(spark, embL.where(survPred), p, IvfIndex.Spec())
+    val freshDel = IvfIndex.open(spark, p)
+      .serve(embL.where(col("vec_id") < 10), corpus = Some(embL))
       .select(lit("ivf_del").as("rung"), col("q_id"), col("rank"), col("n_id"))
     val want = Similarity.evalRungs(exactSurv, freshDel, 10, 5).collect()
       .map(r => ((r.getLong(1), r.getLong(2), r.getLong(3)))).head

@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.SparkSpec
-import graft.analytics.Similarity
+import graft.analytics.{IvfIndex, Similarity}
 
 /** Laws for the serving-recall ingest gauge (VERDICT r16 #6): recall is
   * monotone non-decreasing as the stream fills the index, the FINAL
@@ -33,7 +33,7 @@ class StreamingKnnServeGaugeSpec extends SparkSpec {
     val h = graft.functions.Hashes.md5Long60(col("vec_id").cast("string"))
     val seedPred = h < lit(Similarity.InsertHashThreshold) || col("vec_id") < nQ
     val p = java.nio.file.Files.createTempDirectory("graft_skg").toString
-    Similarity.buildIvfIndexOf(spark, corpus.where(seedPred), p, nLists = 16, rounds = 0)
+    IvfIndex.build(spark, corpus.where(seedPred), p, IvfIndex.Spec())
     val arrivals = corpus.where(!seedPred)
       .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
     assert(arrivals.size >= 3, "need at least 3 arrivals to split into batches")
@@ -59,7 +59,8 @@ class StreamingKnnServeGaugeSpec extends SparkSpec {
       s"recall must be monotone in arrival: ${rows.map(_._3).toSeq}")
     // stream ≡ batch: the final row equals the batch-side metric of the
     // fully-populated index through the SAME metric body
-    val servedFull = Similarity.annIvfServeOf(spark, corpus, p, nQ, k)
+    val servedFull = IvfIndex.open(spark, p)
+      .serve(corpus.where(col("vec_id") < nQ), k, corpus = Some(corpus))
       .select(lit("full").as("rung"), col("q_id"), col("rank"), col("n_id"))
     val want = Similarity.evalRungs(
         gt.select(col("q_id"), col("n_id"), lit(1L).as("__hit")), servedFull, nQ, k)
@@ -73,8 +74,9 @@ class StreamingKnnServeGaugeSpec extends SparkSpec {
     assert(last._3 > 0L, "final recall must be nonzero on the corpus")
     // replay: re-inserting a batch + recomputing the gauge appends a row
     // with IDENTICAL metric values (idempotent-by-algebra insert)
-    Similarity.ivfInsert(spark, p, batches.head.toDF("vec_id", "e"))
-    val servedReplay = Similarity.annIvfServeOf(spark, corpus, p, nQ, k)
+    IvfIndex.open(spark, p).insert(batches.head.toDF("vec_id", "e"))
+    val servedReplay = IvfIndex.open(spark, p)
+      .serve(corpus.where(col("vec_id") < nQ), k, corpus = Some(corpus))
       .select(lit("replay").as("rung"), col("q_id"), col("rank"), col("n_id"))
     val replay = Similarity.evalRungs(
         gt.select(col("q_id"), col("n_id"), lit(1L).as("__hit")), servedReplay, nQ, k)
@@ -103,19 +105,20 @@ class StreamingKnnServeGaugeSpec extends SparkSpec {
     assert(arrivals.size >= 3, "need at least 3 arrivals to split into batches")
     // live index the stream fills
     val p = java.nio.file.Files.createTempDirectory("graft_skgc").toString
-    Similarity.buildPqIndexOf(spark, base, p, nLists = 16)
+    IvfIndex.build(spark, base, p, IvfIndex.Spec(codec = IvfIndex.Codec.Pq))
     // reference index: SAME base build (deterministic model), then the
-    // whole arrival set through ONE batch ivfInsert + compaction — the
+    // whole arrival set through ONE batch insert + compaction — the
     // end state the stream must converge to
     val p2 = java.nio.file.Files.createTempDirectory("graft_skgc2").toString
-    Similarity.buildPqIndexOf(spark, base, p2, nLists = 16)
-    Similarity.ivfInsert(spark, p2, arrivals.toDF("vec_id", "e"))
-    Similarity.ivfCompact(spark, p2)
+    IvfIndex.build(spark, base, p2, IvfIndex.Spec(codec = IvfIndex.Codec.Pq))
+    val ref = IvfIndex.open(spark, p2)
+    ref.insert(arrivals.toDF("vec_id", "e"))
+    ref.compact()
     val queries = corpus.where(col("vec_id") < nQ)
     // recon ground truth: probing EVERY list on the final index makes the
     // coded serve the EXACT top-k over reconstructions (candidates = all
     // members, and the ADC cosine equals cos(q, x̂) by construction)
-    val gtRecon = Similarity.annIvfCodedServeOf(spark, p2, queries, k, nProbe = 16)
+    val gtRecon = IvfIndex.open(spark, p2).serve(queries, k, nProbe = 16)
       .select("q_id", "n_id")
     val ms = MemoryStream[(Long, Seq[Double])]
     val ckpt = java.nio.file.Files.createTempDirectory("graft_skgc_ck").toString
@@ -141,16 +144,16 @@ class StreamingKnnServeGaugeSpec extends SparkSpec {
     // stream ≡ batch, row-for-row: the insert-time encode against the
     // frozen model equals the one-shot batch encode (the FAISS add
     // contract at the serving surface)
-    val servedStream = Similarity.annIvfCodedServeOf(spark, p, queries, k)
+    val servedStream = IvfIndex.open(spark, p).serve(queries, k)
       .select("q_id", "n_id", "rank").collect().map(_.toSeq).toSet
-    val servedBatch = Similarity.annIvfCodedServeOf(spark, p2, queries, k)
+    val servedBatch = IvfIndex.open(spark, p2).serve(queries, k)
       .select("q_id", "n_id", "rank").collect().map(_.toSeq).toSet
     assert(servedStream == servedBatch,
       "stream-filled coded index must serve row-identically to the one-shot batch insert")
     // final gauge row == batch metrics of the reference index, same body
     val want = Similarity.evalRungs(
         gtRecon.select(col("q_id"), col("n_id"), lit(1L).as("__hit")),
-        Similarity.annIvfCodedServeOf(spark, p2, queries, k)
+        IvfIndex.open(spark, p2).serve(queries, k)
           .select(lit("full").as("rung"), col("q_id"), col("rank"), col("n_id")),
         nQ, k)
       .select("recall_pm", "mrr_ppm", "ndcg_pm").head()
@@ -161,8 +164,8 @@ class StreamingKnnServeGaugeSpec extends SparkSpec {
     assert(last._3 > 0L, "final coded recall must be nonzero on the corpus")
     // replay: a re-delivered batch re-encodes bit-identically (the
     // stored-model encode is deterministic) — invisible to the serve
-    Similarity.ivfInsert(spark, p, batches.head.toDF("vec_id", "e"))
-    val servedReplay = Similarity.annIvfCodedServeOf(spark, p, queries, k)
+    IvfIndex.open(spark, p).insert(batches.head.toDF("vec_id", "e"))
+    val servedReplay = IvfIndex.open(spark, p).serve(queries, k)
       .select("q_id", "n_id", "rank").collect().map(_.toSeq).toSet
     assert(servedReplay == servedStream, "replay must be invisible to coded serving")
   }
