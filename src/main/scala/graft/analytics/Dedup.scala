@@ -172,75 +172,6 @@ object Dedup {
   def minhashSignatures(docs: DataFrame, n: Int = 5, numHashes: Int = 16): DataFrame =
     signaturesFrom(shingleHashes(docs, n), numHashes)
 
-  /** Single-document JVM mirror of [[exact]]'s digest — md5 hex of the
-    * normalized text, replaying `md5(regexp_replace(lower(trim(text)),
-    * "\\s+", " "))` operation-for-operation (space-only trim like Spark's
-    * `trim`, then lowercase, then whitespace collapse). Parity with the
-    * batch column is asserted in StreamingHandoffSpec, which rests on it:
-    * identical digests form an EQUIVALENCE relation, so a streaming
-    * ingest stage may drop non-minimum members the moment they collide
-    * and the batch sweep behind cannot tell the difference. None on null
-    * text (the synthetic corpus has none; the batch form groups nulls
-    * under a null digest).
-    *
-    * ASCII-corpus assumption (VERDICT r7 ADVICE): this mirror lowercases
-    * with Locale.ROOT, while Spark's `lower()` falls back to the JVM
-    * default locale for non-ASCII code points — on e.g. a Turkish default
-    * locale the two can disagree about dotted/dotless I. The parity law
-    * is therefore stated (and spec-asserted) for ASCII text, which is all
-    * the synthetic corpus contains; a non-ASCII deployment should either
-    * pin the JVM default locale to ROOT or normalize case upstream. */
-  private[graft] def localExactDigest(text: String): Option[String] = {
-    if (text == null) return None
-    val trimmed = text.replaceAll("^ +", "").replaceAll(" +$", "")
-    val norm = trimmed.toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ")
-    val md = java.security.MessageDigest.getInstance("MD5")
-    Some(md.digest(norm.getBytes("UTF-8")).map(b => f"$b%02x").mkString)
-  }
-
-  /** Single-document JVM mirror of [[minhashSignatures]] — BIT-IDENTICAL
-    * to the batch columns (asserted in StreamingLshSpec): same
-    * whitespace-split shingling (regex split keeping empty tokens, as
-    * Spark's `split` does), same h1/h2 = the two 32-bit big-endian halves
-    * of one md5 over the shingle text, same KM h_j = h1 + j·h2 minima.
-    * None when the document has fewer than n tokens (the batch form emits
-    * no row). This is what a per-row streaming stage calls — no DataFrame
-    * machinery per document. */
-  private[graft] def localMinhashSignature(text: String, n: Int = 5,
-                                           numHashes: Int = 16): Option[Array[Long]] = {
-    // null text → no signature, matching the batch form (split(null) emits
-    // no shingle row); without this a null document in a streaming
-    // Dataset[(Long, String)] would NPE and kill the whole query
-    if (text == null) return None
-    val ws = java.util.regex.Pattern.compile(" ").split(text, -1)
-    if (ws.length < n) None
-    else {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val sig = Array.fill(numHashes)(Long.MaxValue)
-      val seen = scala.collection.mutable.HashSet.empty[String] // per-doc distinct shingles
-      var i = 0
-      while (i <= ws.length - n) {
-        val shingle = ws.slice(i, i + n).mkString(" ")
-        if (seen.add(shingle)) {
-          md.reset()
-          val d = md.digest(shingle.getBytes("UTF-8"))
-          var h1 = 0L; var h2 = 0L
-          var b = 0
-          while (b < 4) { h1 = (h1 << 8) | (d(b) & 0xffL); b += 1 }
-          while (b < 8) { h2 = (h2 << 8) | (d(b) & 0xffL); b += 1 }
-          var j = 0
-          while (j < numHashes) {
-            val v = h1 + j.toLong * h2
-            if (v < sig(j)) sig(j) = v
-            j += 1
-          }
-        }
-        i += 1
-      }
-      Some(sig)
-    }
-  }
-
   private def signaturesFrom(sh: DataFrame, numHashes: Int): DataFrame = {
     val aggs = (0 until numHashes).map(j =>
       min(col("h1") + lit(j.toLong) * col("h2")).as(s"mh$j"))
@@ -848,52 +779,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Single-document JVM mirror of [[winnowedFingerprints]] — BIT-
-    * IDENTICAL selection (spec-asserted against the batch column): same
-    * stride-1 char-k-gram 60-bit md5 digests, same
-    * (g mod 2^40)·2^20 + pos combined sort keys, same full-window minima
-    * and distinct. None when the text is null, shorter than k + w - 1,
-    * or at/over 2^20 chars (the batch frame's guards). Iterates by
-    * Unicode CODE POINTS, not UTF-16 units — Spark's `length`/`substring`
-    * count code points, so a Java `String.substring` mirror would select
-    * different grams (and apply the 2^20 guard differently) on non-BMP
-    * text. This is what the streaming ingest guard calls per document —
-    * no DataFrame machinery per row. */
-  private[graft] def localWinnowedFingerprints(text: String, k: Int = 20,
-                                               w: Int = 8): Option[Set[Long]] = {
-    if (text == null) return None
-    val cps = text.codePoints().toArray
-    val nLen = cps.length
-    if (nLen < k + w - 1 || nLen >= (1 << PosBits)) return None
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val nG = nLen - k + 1
-    val gs = new Array[Long](nG)
-    val cks = new Array[Long](nG)
-    val gMod = 1L << 40
-    val posMod = 1L << PosBits
-    var i = 0
-    while (i < nG) {
-      md.reset()
-      val d = md.digest(new String(cps, i, k).getBytes("UTF-8"))
-      var v = 0L
-      var b = 0
-      while (b < 8) { v = (v << 8) | (d(b) & 0xffL); b += 1 }
-      val g = v >>> 4 // first 15 hex chars == first 60 bits of the digest
-      gs(i) = g
-      cks(i) = (g % gMod) * posMod + i
-      i += 1
-    }
-    val out = scala.collection.mutable.HashSet.empty[Long]
-    var q = 0
-    while (q <= nG - w) {
-      var mn = cks(q); var j = q + 1
-      while (j < q + w) { if (cks(j) < mn) mn = cks(j); j += 1 }
-      out += gs((mn % posMod).toInt)
-      q += 1
-    }
-    Some(out.toSet)
-  }
-
   /** Near-dup candidate pairs from shared winnowed fingerprints — the
     * scale path over [[substringSpans]]' exact signal: docs sharing
     * ≥ `minShared` selected fingerprints (document frequency capped at
@@ -1102,41 +987,6 @@ object Dedup {
 
   def cdcMassQuery(spark: SparkSession, dir: String): DataFrame =
     cdcMass(Tables.documents(spark, dir)).orderBy("doc_id")
-
-  /** Single-document JVM mirror of [[cdcChunks]]' hash column —
-    * BIT-IDENTICAL to the batch chunking (asserted in StreamingCdcSpec):
-    * same normalization as [[localExactDigest]], same Horner boundary
-    * arithmetic over codepoints, same tail close, md5 over the chunk's
-    * UTF-8 bytes. Returns the chunk hashes in document order; None for
-    * null/too-short docs (the batch frame emits no row). What the
-    * streaming CDC guard calls per row. */
-  private[graft] def localCdcChunkHashes(text: String, k: Int = 8,
-                                         divisor: Long = 64): Option[Seq[String]] = {
-    if (text == null) return None
-    val trimmed = text.replaceAll("^ +", "").replaceAll(" +$", "")
-    val nt = trimmed.toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ")
-    val cps = nt.codePoints().toArray
-    val n = cps.length
-    if (n < k) return None
-    val ends = scala.collection.mutable.ArrayBuffer.empty[Int] // 1-based ends
-    var i = 0
-    while (i <= n - k) {
-      var acc = 0L
-      var j = 0
-      while (j < k) { acc = (acc * 257 + cps(i + j)) % 2147483647L; j += 1 }
-      if (acc % divisor == 0) ends += i + k // 0-based start i ⇒ 1-based end i+k
-      i += 1
-    }
-    if (ends.isEmpty || ends.last != n) ends += n
-    val md = java.security.MessageDigest.getInstance("MD5")
-    var prev = 0 // 0-based exclusive start
-    Some(ends.toSeq.map { e =>
-      md.reset()
-      val chunk = new String(cps, prev, e - prev)
-      prev = e
-      md.digest(chunk.getBytes("UTF-8")).map(b => f"$b%02x").mkString
-    })
-  }
 
   /** Incremental ingest dedup — the CONTINUOUS-pipeline counterpart of
     * [[exactQuery]]: a new batch of documents (here every 5th doc_id

@@ -192,8 +192,10 @@ final class IvfIndex private (spark: SparkSession, val path: String,
     * a failed second rename rolls the old dir back, a stale `<sub>_old`
     * from an interrupted compaction fails fast, and the swap re-lists
     * the directory and aborts if its file set moved (best effort — the
-    * rule is "do not compact under live ingest";
-    * [[graft.streaming.StreamingIvfIngest]] documents it too). */
+    * rule is "do not compact under live ingest"). IndexArtifactsSpec
+    * pins the replay law for a flat and a PQ index: a re-inserted batch
+    * leaves serving unchanged, and compaction restores a fresh build's
+    * membership count. */
   private def compactArtifact(fs: FileSystem, sub: String, nFiles: Int, clusterCol: String,
                               tomb: Option[Path]): Unit = {
     val live = new Path(s"$path/$sub")

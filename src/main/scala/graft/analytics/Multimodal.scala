@@ -197,9 +197,8 @@ object Multimodal {
 
   /** The row-local dHash core — wrap as a width-9 BMP, parse the header
     * BACK (geometry from the container, not the inputs), pool, compare.
-    * Shared by the batch pass above and the streaming ingest mirror
-    * ([[graft.streaming.StreamingPhash]]), so the two faces are
-    * bit-identical by construction. */
+    * Shared by the batch pass above and the fused [[dAHash]] pass, so
+    * the two faces are bit-identical by construction. */
   def localDHash(data: Array[Byte]): (Long, Long) = {
     val bmp = MediaCodec.toBmp(data, width = 9)
     val info = MediaCodec.probe(bmp).getOrElse(

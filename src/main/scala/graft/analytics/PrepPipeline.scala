@@ -40,9 +40,9 @@ object PrepPipeline {
   def manifest(spark: SparkSession, dir: String): DataFrame =
     manifestOf(Tables.documents(Sessions.composed(spark), dir))
 
-  /** The same composition over an arbitrary (doc_id, text, ...) frame —
-    * what the streaming→batch handoff runs over ingest-dedup survivors
-    * (StreamingHandoffSpec proves the manifest is identical either way). */
+  /** The same composition over an arbitrary (doc_id, text, ...) frame.
+    * Removing the exact-dedup non-keepers up front leaves the manifest
+    * unchanged (PrepPipelineSpec pins this). */
   def manifestOf(docs: DataFrame): DataFrame = {
     // materialized (OPTIMIZATION r19, guide §1.2): the gated corpus feeds
     // the exact-dedup keeper pass AND every assemble stage through `dd`;

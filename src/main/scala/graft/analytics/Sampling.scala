@@ -29,19 +29,6 @@ object Sampling {
   def hashBucket(key: Column, buckets: Int): Column =
     pmod(Hashes.md5Long60(key.cast("string")), lit(buckets.toLong))
 
-  /** Row-local JVM mirror of [[split]]'s fold assignment for a long key —
-    * one formula with the column form (md5 of the decimal string, first
-    * 15 hex digits, mod 1000), shared by the streaming faces and the
-    * spec replays so the two sides cannot drift. */
-  def localFold(key: Long, pTrain: Double = 0.8, pVal: Double = 0.1): String = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(key.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(15)
-    val b = java.lang.Long.parseLong(hex, 16) % 1000
-    if (b < (pTrain * 1000).toLong) "train"
-    else if (b < ((pTrain + pVal) * 1000).toLong) "val"
-    else "test"
-  }
-
   /** Train/val/test assignment by hashed key: `pTrain`/`pVal` in
     * percent-of-1000 granularity via bucket 0..999. Keying by `doc_id`
     * gives a row split; keying by an author/user column gives a
@@ -153,11 +140,9 @@ object Sampling {
       .orderBy("source", "rank")
 
   /** Row-local JVM mirror of [[groupReservoir]]'s ES ranking key —
-    * md5("gr:" ++ key) → u ∈ (0,1] → round(ln(u)·1e8) / max(w,1) — shared
-    * by the streaming ingest mirror ([[graft.streaming
-    * .StreamingReservoir]]) and the batch spec's local replay, so the
-    * two faces rank by ONE formula. The rounding is BigDecimal HALF_UP
-    * on the double's exact binary value, bit-identical to Spark's
+    * md5("gr:" ++ key) → u ∈ (0,1] → round(ln(u)·1e8) / max(w,1) — what
+    * the batch spec's local replay ranks by. The rounding is BigDecimal
+    * HALF_UP on the double's exact binary value, bit-identical to Spark's
     * `round(col)`. */
   def localGroupEsKey(key: Long, weight: Long): Double = {
     val hex = java.security.MessageDigest.getInstance("MD5")
@@ -449,8 +434,8 @@ object Sampling {
     dsirGumbel(Tables.documents(spark, dir)).orderBy("rank")
 
   /** The per-document DSIR weight frame `(doc_id, dsir_w)` — the scoring
-    * half of [[dsirSelect]], exposed so the streaming gate's local
-    * mirror can be pinned against the exact batch column. */
+    * half of [[dsirSelect]], shared with [[dsirGumbel]] and the
+    * PrepPipeline DSIR stage. */
   def dsirWeights(docs: DataFrame, targetLang: String = "en",
                   buckets: Int = 64): DataFrame = {
     val bucketed = dsirBucketed(docs, buckets)
@@ -484,8 +469,7 @@ object Sampling {
     * state of the importance gate (the [[graft.analytics.Similarity]]
     * centroid discipline). A bucket absent from the training corpus
     * carries 0 (the batch inner join's skip semantics — with 64 buckets
-    * and any real corpus every bucket is occupied; the 0 default only
-    * matters for novel stream-side vocabulary). */
+    * and any real corpus every bucket is occupied). */
   def dsirRatioTable(docs: DataFrame, targetLang: String = "en",
                      buckets: Int = 64): Array[Long] = {
     val out = Array.fill(buckets)(0L)
@@ -493,32 +477,6 @@ object Sampling {
       .collect().foreach(r => out(r.getLong(0).toInt) = r.getLong(1))
     out
   }
-
-  /** Row-local JVM mirror of the batch weight column: md5-bucket every
-    * whitespace token of the trimmed text, Σ count·lr(bucket). Null text
-    * scores None (the batch explode drops the doc from the weight frame
-    * entirely). Spec-pinned bit-identical to [[dsirWeights]].
-    *
-    * Hot-path economics (VERDICT r12 #7): ONE MessageDigest instance per
-    * call (digest() self-resets between tokens — the
-    * [[graft.analytics.Dedup.localMinhashSignature]] discipline), and the
-    * 60-bit bucket key is read straight off the digest bytes (first 15
-    * hex nibbles = bytes 0–6 plus the high nibble of byte 7) instead of
-    * allocating a 32-char hex string + substring + parseLong per token —
-    * this mirror is the advertised one-scan 100 TB ingest gate, so
-    * per-token factory/garbage cost is the whole latency story. */
-  def localDsirWeight(text: String, lr: Array[Long]): Option[Long] =
-    Option(text).map { t =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      t.trim.split("\\s+").iterator.map { w =>
-        val d = md.digest(w.getBytes("UTF-8"))
-        var v = 0L
-        var i = 0
-        while (i < 7) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-        v = (v << 4) | ((d(7) & 0xf0L) >> 4)
-        lr((v % lr.length).toInt)
-      }.sum
-    }
 
   def dsirQuery(spark: SparkSession, dir: String): DataFrame =
     dsirSelect(Tables.documents(spark, dir)).orderBy("rank")

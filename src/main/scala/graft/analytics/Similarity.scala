@@ -139,10 +139,10 @@ object Similarity {
     * share) and fall back to shuffle when it is not — the fixture's
     * hash split makes the eval side 20% of the corpus, so the hint is
     * deliberately left to the optimizer rather than forced. Recall is
-    * the documented [[embeddingDupLsh]] trade; the streaming face
-    * ([[graft.streaming.StreamingContam]]) is exact against the frozen
-    * eval matrix, so the two bracket the true leak set from below and
-    * above (spec-pinned). */
+    * the documented [[embeddingDupLsh]] trade: every reported leak is a
+    * true cross-fold pair at cosine ≥ τ, but a pair the bands never
+    * bucket together is missed (SimilaritySpec pins the subset law
+    * against the exhaustive cross-fold sweep). */
   def semanticContamination(spark: SparkSession, dir: String,
                             threshold: Double = 0.4): DataFrame =
     semanticContaminationOf(embeddingsD(spark, dir), threshold)
@@ -1564,75 +1564,6 @@ object Similarity {
   def semanticDedupMultiQuery(spark: SparkSession, dir: String): DataFrame =
     semanticDedupMulti(spark, dir).orderBy("vec_id")
 
-  /** Row-local JVM mirror of [[assignedListsScored]]'s rounded-cosine
-    * argmax (ties to smaller centroid id) — what the streaming semantic
-    * guard calls per arriving vector. The cosine fold accumulates in
-    * index order, matching the `cosine_sim` expression's sequential
-    * aggregate (bit-equality of that fold is spec-asserted), and the
-    * rounding is the same HALF_UP-at-4 both engines apply. None when the
-    * vector's length differs from the centroids' (the expression's NULL
-    * on dim mismatch). */
-  private[graft] def localListAssign(v: Array[Double],
-      cents: Array[(Long, Array[Double])]): Option[(Long, Double)] = {
-    if (cents.isEmpty || v == null || v.length != cents.head._2.length) return None
-    var bestC = Double.NegativeInfinity
-    var bestId = Long.MaxValue
-    cents.foreach { case (cid, ce) =>
-      val c = localCosine4(v, ce)
-      // NaN cosine (zero-norm vector or centroid): never a winner. The
-      // batch expression yields NaN there too, but Spark's NaN-is-largest
-      // ordering would make it win the argmax — a zero-norm ARRIVAL is
-      // instead rejected outright below (None), which the streaming
-      // callers treat as "skip this vector"; crashing on
-      // BigDecimal(NaN) (the pre-r10 behavior) is never right.
-      if (!c.isNaN && (c > bestC || (c == bestC && cid < bestId))) { bestC = c; bestId = cid }
-    }
-    if (bestId == Long.MaxValue) None else Some((bestId, bestC))
-  }
-
-  /** Row-local JVM mirror of [[assignedTop2Spilled]] — the spill-band
-    * top-2 assignment the streaming multi-assignment guard applies per
-    * arriving vector: the primary list ALWAYS, plus the second-nearest
-    * list iff the exact decimal shifts of the two rounded cosines are
-    * within `epsI` (the same integer predicate as the batch column,
-    * spec-asserted bit-identical). Returns the assigned list ids,
-    * primary first; None mirrors [[localListAssign]]'s dim-mismatch /
-    * all-NaN rejection. */
-  private[graft] def localListAssignTop2(v: Array[Double],
-      cents: Array[(Long, Array[Double])], epsI: Long): Option[Seq[Long]] = {
-    if (cents.length < 2 || v == null || v.length != cents.head._2.length) return None
-    def shift(c: Double): Long =
-      BigDecimal(c * 1e4).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-    var c1 = Double.NegativeInfinity; var id1 = Long.MaxValue
-    var c2 = Double.NegativeInfinity; var id2 = Long.MaxValue
-    cents.foreach { case (cid, ce) =>
-      val c = localCosine4(v, ce)
-      if (!c.isNaN) {
-        if (c > c1 || (c == c1 && cid < id1)) {
-          c2 = c1; id2 = id1; c1 = c; id1 = cid
-        } else if (c > c2 || (c == c2 && cid < id2)) {
-          c2 = c; id2 = cid
-        }
-      }
-    }
-    if (id1 == Long.MaxValue) None
-    else if (id2 == Long.MaxValue) Some(Seq(id1))
-    else Some(if (shift(c1) - shift(c2) <= epsI) Seq(id1, id2) else Seq(id1))
-  }
-
-  /** Exact rounded cosine between two JVM vectors — the same fold order
-    * and HALF_UP-at-4 rounding as `round(cosine_sim(a, b), 4)`; used by
-    * the streaming semantic guard's within-cluster comparisons. */
-  private[graft] def localCosine4(a: Array[Double], b: Array[Double]): Double = {
-    var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-    val raw = d / (math.sqrt(na) * math.sqrt(nb))
-    // zero-norm input → NaN, same as the batch `cosine_sim` expression;
-    // BigDecimal(NaN) would throw, so pass it through un-rounded
-    if (raw.isNaN) Double.NaN
-    else BigDecimal(raw).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-  }
-
   /** Int8 scalar quantization (SQ8) — the vector-compression step a
     * 100 TB similarity stack stores and serves: per-vector min/max
     * codebook, each dimension snapped to `round((x−mn)·255/(mx−mn))` ∈
@@ -2353,11 +2284,13 @@ object Similarity {
   }
 
   /** `knn_ann_ivf_opq_pca` — the cascade through the identical IVF-PQ
-    * chain (one body with the PQ/OPQ rungs). On the driver corpus both
-    * gates refuse (near-isotropic, λ₂/λ₁ ≈ 0.93 — the `emb_pca_power`
-    * note) and the rung hashes identically to `knn_ann_ivf_pq`;
-    * SimilaritySpec plants the oblique-anisotropy corpus where stage 2
-    * engages and pins the recall win over both PQ and natural OPQ. */
+    * chain (one body with the PQ/OPQ rungs). On the driver corpus the
+    * natural gate refuses and the rotated gate engages (stage 2): the
+    * rung encodes the permuted Householder-rotated view, its `opq_pca`
+    * index stores `hw` and `perm` (IndexArtifactsSpec), and its rows
+    * differ from `knn_ann_ivf_pq`'s. SimilaritySpec plants the
+    * oblique-anisotropy corpus where stage 2 engages and pins the recall
+    * win over both PQ and natural OPQ. */
   def annIvfOpqPca(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
                    nLists: Int = 16, nProbe: Int = 4): DataFrame =
     annIvfPqOver(spark, opqPcaView(embeddingsD(spark, dir)), nQueries, k, nLists, nProbe)
@@ -2371,10 +2304,9 @@ object Similarity {
     * the double view). The oracle replays the whole power-iteration +
     * Householder chain from first principles, so a hash match pins the
     * PCA fit, the sign choice, den and every per-vector numerator
-    * cross-engine bit-for-bit — the rotated branch of
-    * [[annIvfOpqPca]]'s cascade stays oracle-proven even on corpora
-    * where its gates refuse (the oracle corpus is near-isotropic, so
-    * the cascade's own oracle exercises the raw branch). Also the ops
+    * cross-engine bit-for-bit, whether or not [[annIvfOpqPca]]'s
+    * rotated gate then engages (on the driver corpus it does, so the
+    * cascade's own oracle replays the rotated branch too). Also the ops
     * face a deployment inspects when a served PCA-OPQ index looks
     * wrong: the stored model is (w, den), and this is its apply. */
   def embHouseholderQuery(spark: SparkSession, dir: String): DataFrame = {
@@ -2487,9 +2419,10 @@ object Similarity {
     //    insert path that encoded arrivals against a stale frozen model
     //    would still pass same-session row-equality specs; here its
     //    recall is an oracled row;
-    //  - pca: the PCA-cascade rung (r18) — on this near-isotropic corpus
-    //    both gates refuse and it must score EXACTLY like pq (the
-    //    never-a-loss law, an oracled equality);
+    //  - pca: the PCA-cascade rung (r18) — on the driver corpus the
+    //    natural gate refuses and the rotated gate engages, so it serves
+    //    the rotated, permuted view and its row differs from pq; the
+    //    oracle replays the whole cascade;
     //  - ivf_del serves with live tombstones and is judged against the
     //    exact ground truth OVER THE SURVIVORS — the best answer the
     //    post-delete corpus can give — so its metrics equal a fresh index

@@ -248,8 +248,8 @@ object TextAnalysis {
           .otherwise("ok"))
       .withColumn("keep", col("reason") === "ok")
       // keep `text`: a gate that drops the payload cannot feed the next
-      // pipeline stage (streaming ingest chains this straight into LSH
-      // dedup); the oracle-facing query entry projects it away
+      // pipeline stage (PrepPipeline chains this straight into dedup);
+      // the oracle-facing query entry projects it away
       .select("doc_id", "text", "n_tokens", "lang_pred", "keep", "reason")
   }
 

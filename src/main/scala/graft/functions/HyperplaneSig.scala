@@ -99,38 +99,4 @@ object HyperplaneSig {
     val u = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) | ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
     u / 2147483648.0 - 1.0
   }
-
-  // memoized flat [plane][dim] matrices: without this every vector would
-  // pay nPlanes*dims md5 digests (the expression caches its matrix once
-  // per operator instance; the per-row mirror needs the same economy)
-  private val planeCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Double]]()
-  private def planesFor(nPlanes: Int, dims: Int): Array[Double] =
-    planeCache.computeIfAbsent((nPlanes, dims), { case (np, dm) =>
-      Array.tabulate(np * dm)(i => planeComponent(i / dm, i % dm))
-    })
-
-  /** Single-vector JVM mirror of the expression — BIT-IDENTICAL to the
-    * batch `hyperplane_sig` column (asserted in StreamingLshSpec): same
-    * plane matrix, same dot accumulation order, same band packing. None
-    * for a dimension mismatch (the expression yields NULL). This is what
-    * a per-row streaming stage calls. */
-  def signatureLocal(vec: Array[Double], dims: Int, bands: Int,
-                     rowsPerBand: Int): Option[Array[Int]] = {
-    if (vec.length != dims) None
-    else {
-      val planes = planesFor(bands * rowsPerBand, dims)
-      val out = new Array[Int](bands)
-      var p = 0
-      while (p < bands * rowsPerBand) {
-        var dot = 0.0
-        var d = 0
-        val base = p * dims
-        while (d < dims) { dot += vec(d) * planes(base + d); d += 1 }
-        if (dot > 0) out(p / rowsPerBand) |= 1 << (p % rowsPerBand)
-        p += 1
-      }
-      Some(out)
-    }
-  }
 }

@@ -49,6 +49,27 @@ class CdcSpec extends SparkSpec {
     // not exact): divisor 64 on this corpus must land in [16, 256]
     val mean = chunks.map(_._3).sum.toDouble / chunks.length
     assert(mean > 16 && mean < 256, s"mean chunk length $mean")
+    // the chunk hashes, replayed per document: normalize (space-only trim,
+    // lowercase, whitespace collapse), close a chunk after every 8-code-
+    // point window whose base-257 Horner value mod 2^31-1 is divisible by
+    // 64, close the tail, md5-hex each chunk
+    def replay(text: String): Seq[String] = {
+      val cps = text.replaceAll("^ +", "").replaceAll(" +$", "")
+        .toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ").codePoints().toArray
+      val cuts = (0 to cps.length - 8).filter { i =>
+        cps.slice(i, i + 8).foldLeft(0L)((a, c) => (a * 257 + c) % 2147483647L) % 64 == 0
+      }.map(_ + 8)
+      val ends = if (cuts.lastOption.contains(cps.length)) cuts else cuts :+ cps.length
+      (0 +: ends).sliding(2).map { case Seq(s, e) =>
+        java.security.MessageDigest.getInstance("MD5")
+          .digest(new String(cps, s, e - s).getBytes("UTF-8")).map(b => f"$b%02x").mkString
+      }.toSeq
+    }
+    val hashes = Dedup.cdcChunks(docs).select("doc_id", "c_start", "c_hash").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+      .groupBy(_._1).map { case (d, cs) => d -> cs.sortBy(_._2).map(_._3).toSeq }
+    val texts = docs.select("doc_id", "text").as[(Long, String)].collect().toMap
+    hashes.foreach { case (d, hs) => assert(hs == replay(texts(d)), s"doc $d chunk hashes") }
   }
 
   test("shift resilience: a prefix edit re-aligns the shared suffix chunk-for-chunk") {

@@ -114,6 +114,33 @@ class DedupSpec extends SparkSpec {
     assert(got.contains((1L, 2L)))
   }
 
+  test("minhash signatures replay the Kirsch–Mitzenmacher definition per document on the real corpus") {
+    import org.apache.spark.sql.functions.col
+    val corpus = graft.Tables.documents(spark, sfDir)
+      .where(col("text").isNotNull).limit(30).select("doc_id", "text")
+    val batch = Dedup.minhashSignatures(corpus, n = 5, numHashes = 16)
+      .collect().map(r => r.getLong(0) -> (1 to 16).map(r.getLong(_))).toMap
+    // distinct 5-token shingles of a split on " " that keeps empty tokens
+    // (Spark's split); h1/h2 = the two big-endian 32-bit halves of one md5;
+    // component j = min over shingles of h1 + j·h2; no row below 5 tokens
+    def replay(text: String): Option[Seq[Long]] = {
+      val ws = java.util.regex.Pattern.compile(" ").split(text, -1)
+      if (ws.length < 5) None
+      else Some {
+        val hs = ws.sliding(5).map(_.mkString(" ")).toSeq.distinct.map { s =>
+          val d = java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
+          def half(from: Int) = (from until from + 4).foldLeft(0L)((a, b) => (a << 8) | (d(b) & 0xffL))
+          (half(0), half(4))
+        }
+        (0 until 16).map(j => hs.map { case (h1, h2) => h1 + j * h2 }.min)
+      }
+    }
+    val local = corpus.as[(Long, String)].collect()
+      .flatMap { case (id, t) => replay(t).map(id -> _) }.toMap
+    assert(batch.nonEmpty && local.keySet == batch.keySet)
+    local.foreach { case (id, sig) => assert(sig == batch(id), s"doc $id") }
+  }
+
   test("simhash: identical docs get identical hashes; near-dups land within small hamming") {
     val hashes = Dedup.simhash(docs).as[(Long, Long)].collect().toMap
     assert(hashes(1L) != hashes(3L))

@@ -169,7 +169,8 @@ class IndexArtifactsSpec extends SparkSpec {
     val h = graft.functions.Hashes.md5Long60(col("vec_id").cast("string"))
     val p = tmp("ins")
     IvfIndex.build(spark, embL.where(h < lit(Similarity.InsertHashThreshold)), p, Spec())
-    open(p).insert(embL.where(h >= lit(Similarity.InsertHashThreshold)))
+    val arrivals = embL.where(h >= lit(Similarity.InsertHashThreshold))
+    open(p).insert(arrivals)
     // the union membership equals a fresh full-corpus build's (the seed
     // set is contained in the base split by construction, so the stored
     // centroids are the full build's centroids)
@@ -187,6 +188,49 @@ class IndexArtifactsSpec extends SparkSpec {
     val after = rows4(serve(p))
     val fresh = rows4(serve(p2))
     assert(before.nonEmpty && before === after && before === fresh)
+    // an at-least-once replay of the same batch appends bit-identical
+    // rows that serving cannot see; compaction drops them again
+    open(p).insert(arrivals)
+    assert(spark.read.parquet(p + "/assign").count() > a1.size, "the replay must append rows")
+    assert(rows4(serve(p)) === fresh, "replayed rows must be invisible to serving")
+    open(p).compact()
+    assert(spark.read.parquet(p + "/assign").count() === a1.size.toLong)
+    assert(rows4(serve(p)) === fresh)
+  }
+
+  test("PQ insert: batched inserts == one insert; a replayed batch is invisible; compaction restores the count") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    val embL = graft.Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+    val h = graft.functions.Hashes.md5Long60(col("vec_id").cast("string"))
+    val base = embL.where(h < lit(Similarity.InsertHashThreshold))
+    val arrivals = embL.where(h >= lit(Similarity.InsertHashThreshold))
+      .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
+    assert(arrivals.size >= 2, "the hash split must leave an insert set")
+    val (b1, b2) = arrivals.splitAt(arrivals.size / 2)
+    // the codebooks and centroids train once on the base and freeze;
+    // arrivals encode against that frozen model, batch by batch here
+    val p = tmp("pqins")
+    IvfIndex.build(spark, base, p, Spec(codec = Codec.Pq))
+    open(p).insert(b1.toDF("vec_id", "e"))
+    open(p).insert(b2.toDF("vec_id", "e"))
+    // the same base, then every arrival in one insert
+    val p2 = tmp("pqins1")
+    IvfIndex.build(spark, base, p2, Spec(codec = Codec.Pq))
+    open(p2).insert(arrivals.toDF("vec_id", "e"))
+    val served = rows4(serve(p))
+    assert(served.nonEmpty && served === rows4(serve(p2)))
+    // a full build holds one membership row per corpus vector
+    val nFull = embL.count()
+    assert(spark.read.parquet(p + "/assign").count() === nFull)
+    // replaying the first batch re-encodes it bit-identically
+    open(p).insert(b1.toDF("vec_id", "e"))
+    assert(spark.read.parquet(p + "/assign").count() > nFull, "the replay must append rows")
+    assert(rows4(serve(p)) === served, "replayed rows must be invisible to coded serving")
+    open(p).compact()
+    assert(spark.read.parquet(p + "/assign").count() === nFull)
+    assert(rows4(serve(p)) === served)
   }
 
   test("ivfDelete: tombstoned residents vanish from serving; compaction applies them physically") {
@@ -307,8 +351,7 @@ class IndexArtifactsSpec extends SparkSpec {
       assert(rows4(open(p).serve(donor, k = 5)) === before,
         s"$name: compaction must be invisible to coded serving")
     }
-    // the PCA-OPQ face with a LIVE Householder artifact: the real corpus
-    // never engages the rotation (gates refuse), so build over the
+    // the PCA-OPQ face with a LIVE Householder artifact, built over the
     // oblique plant (two strong off-axis directions, flat per-dim
     // variance — the SimilaritySpec r17 #5 fixture) where the stored
     // model is hw + perm, and the insert path must rotate-then-permute

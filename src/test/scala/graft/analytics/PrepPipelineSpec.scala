@@ -43,6 +43,33 @@ class PrepPipelineSpec extends SparkSpec {
     assert(evalKeepers.forall(byId.contains), "every eval keeper survives")
   }
 
+  test("pipe_prep manifest is unchanged when exact-dedup non-keepers are removed up front") {
+    // the corpus carries no duplicate mass, so inject it under fresh ids:
+    // 20 verbatim copies, 10 case-mangled, 10 whitespace-padded (leading
+    // spaces and doubled internal spaces normalize away), and a chain of
+    // two more copies of the first document
+    val base = graft.Tables.documents(spark, sfDir)
+      .select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1).toSeq
+    val corpus = (base ++
+      base.take(20).map { case (id, t) => (10000L + id, t) } ++
+      base.slice(20, 30).map { case (id, t) => (20000L + id, t.toUpperCase) } ++
+      base.slice(30, 40).map { case (id, t) => (30000L + id, "  " + t.replaceAll(" ", "  ")) } ++
+      Seq((40000L, base.head._2), (40001L, base.head._2))).sortBy(_._1)
+    val docsDF = corpus.toDF("doc_id", "text")
+    val keepers = Dedup.exact(docsDF).select("keep_doc_id").as[Long].collect().toSet
+    val dropped = corpus.map(_._1).toSet -- keepers
+    assert(dropped.size == 42 && dropped.forall(_ >= 10000L),
+      s"expected exactly the 42 injected copies, got ${dropped.size}")
+    val survivors = docsDF.join(keepers.toSeq.toDF("doc_id"), "doc_id")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, String, Long, Option[Long], Option[Long])].collect().sortBy(_._1).toSeq
+    val full = rows(PrepPipeline.manifestOf(docsDF))
+    val pre = rows(PrepPipeline.manifestOf(survivors))
+    assert(pre == full,
+      s"only-pre: ${(pre.toSet -- full.toSet).take(3)}, only-full: ${(full.toSet -- pre.toSet).take(3)}")
+    assert(full.nonEmpty && full.forall(_._1 < 10000L))
+  }
+
   test("pipe_prep_quality: a boilerplate-wrapped dup loses to its clean twin") {
     // the motivating FineWeb case: the same text once clean, once wrapped
     // in punctuation boilerplate. Exact dedup can't even GROUP the two

@@ -19,6 +19,14 @@ class SamplingSpec extends SparkSpec {
     val frac = a.values.groupBy(identity).view.mapValues(_.size / n).toMap
     assert(math.abs(frac("train") - 0.8) < 0.1 && math.abs(frac("val") - 0.1) < 0.06,
       s"fold fractions drifted: $frac")
+    // the fold replays from the key alone: the first 15 hex digits of
+    // md5(decimal key), mod 1000, against the 800 and 900 cut points
+    a.foreach { case (id, fold) =>
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(15)
+      val b = java.lang.Long.parseLong(hex, 16) % 1000
+      assert(fold == (if (b < 800) "train" else if (b < 900) "val" else "test"), s"doc $id")
+    }
   }
 
   test("group-aware split: keying by a group column keeps each group in one fold") {
@@ -261,7 +269,7 @@ class SamplingSpec extends SparkSpec {
     val src0 = docs.where(col("source") === "src0")
       .select("doc_id", "n_chars").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
-    // one body with the streaming mirror: Sampling.localGroupEsKey
+    // the row-local ES key: Sampling.localGroupEsKey
     val want = src0.sortBy { case (id, w) =>
       (-Sampling.localGroupEsKey(id, w), id) }.take(10).map(_._1).toSeq
     val gotSrc0 = got.filter(_._1 == "src0").sortBy(_._3).map(_._2).toSeq

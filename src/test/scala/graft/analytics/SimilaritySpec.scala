@@ -5,6 +5,14 @@ import graft.SparkSpec
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
+  /** The same fold order and HALF_UP-at-4 rounding as `round(cosine_sim(a, b), 4)`. */
+  private def cos4(a: Array[Double], b: Array[Double]): Double = {
+    var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+    BigDecimal(d / (math.sqrt(na) * math.sqrt(nb)))
+      .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+  }
+
   test("native cosine_sim expression: bit-equal to the composed fold, SQL-callable, null on length mismatch") {
     import org.apache.spark.sql.functions.col
     val rnd = new scala.util.Random(5)
@@ -75,6 +83,24 @@ class SimilaritySpec extends SparkSpec {
     val recall = (exact intersect lsh).size.toDouble / exact.size
     info(f"near-dup LSH recall = $recall%.3f (${exact.size} exact pairs)")
     assert(recall >= 0.5, f"near-dup recall collapsed: $recall%.3f")
+  }
+
+  test("semantic contamination: every LSH leak is in the exhaustive cross-fold sweep") {
+    import org.apache.spark.sql.functions.col
+    val emb = graft.Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+    val fold = Sampling.split(emb.keys.toSeq.toDF("vec_id"), col("vec_id"))
+      .as[(Long, String)].collect().toMap
+    val exact = (for {
+      (t, tv) <- emb if fold(t) == "train"
+      (e, ev) <- emb if fold(e) != "train"
+      c = cos4(tv, ev) if c >= 0.4
+    } yield (t, e, fold(e), c)).toSet
+    assert(exact.nonEmpty, "corpus must contain at least one cross-fold leak")
+    val lsh = Similarity.semanticContamination(spark, sfDir)
+      .as[(Long, Long, String, Double)].collect().toSet
+    assert(lsh.subsetOf(exact), s"not in the exact sweep: ${(lsh -- exact).take(3)}")
   }
 
   test("embedding clusters: pair endpoints share a keeper, keepers are component minima") {
@@ -379,6 +405,25 @@ class SimilaritySpec extends SparkSpec {
         s"primary assignment changed under spill on vec $id")
       if (!kept) assert(!multi(id)._3,
         s"vec $id dropped by single-assignment but kept by multi (superset law)")
+    }
+    // (list_id, list_id2), replayed per vector: the two best rounded
+    // cosines to the hash centroids (ties to the smaller id), and the
+    // second list iff the two differ by at most eps on the 1e-4 grid
+    val cents16 = Similarity.hashCentroids(emb, 16)
+    val corpusVecs = emb.as[(Long, Seq[Double])].collect()
+    def grid(c: Double): Long = BigDecimal(c * 1e4).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+    for (eps <- Seq(0.05, -1.0)) {
+      val lists = Similarity.semanticDedupMultiOf(emb, nLists = 16, tau = 0.4, eps = eps)
+        .select("vec_id", "list_id", "list_id2").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1) +: Option(r.get(2)).map(_ => r.getLong(2)).toSeq))
+        .toMap
+      corpusVecs.foreach { case (id, v) =>
+        val top2 = cents16.map { case (c, ce) => (cos4(v.toArray, ce), c) }
+          .sortBy { case (cs, c) => (-cs, c) }.take(2)
+        val gap = grid(top2(0)._1) - grid(top2(1)._1)
+        val want = if (gap <= math.round(eps * 1e4)) top2.map(_._2).toSeq else Seq(top2(0)._2)
+        assert(lists(id) == want, s"eps=$eps vec $id")
+      }
     }
 
     // --- planted straddle: a near-identical pair split across two lists,

@@ -74,6 +74,26 @@ class SubstringDedupSpec extends SparkSpec {
             s"i -> cast(conv(substring(md5(substring(text, i + 1, $K)), 1, 15), 16, 10) as long))"))
         .as("g")).as[Long].collect().toSet
     assert(fps.nonEmpty && fps.subsetOf(grams))
+    // exact selection, replayed per document over code points: the 60-bit
+    // md5 gram digests g, sort key (g mod 2^40)·2^20 + position, the
+    // minimum of every full window of W keys
+    def replay(text: String): Set[Long] = {
+      val cps = text.codePoints().toArray
+      val gs = (0 to cps.length - K).map { i =>
+        val d = java.security.MessageDigest.getInstance("MD5")
+          .digest(new String(cps, i, K).getBytes("UTF-8"))
+        (0 until 8).foldLeft(0L)((a, b) => (a << 8) | (d(b) & 0xffL)) >>> 4
+      }
+      val keys = gs.zipWithIndex.map { case (g, i) => (g % (1L << 40)) * (1L << 20) + i }
+      keys.sliding(W).map(win => gs((win.min % (1L << 20)).toInt)).toSet
+    }
+    val perDoc = Dedup.winnowedFingerprints(corpus, K, W)
+      .as[(Long, Long)].collect().groupBy(_._1).map { case (d, v) => d -> v.map(_._2).toSet }
+    val local = corpus.select("doc_id", "text").as[(Long, String)].collect()
+      .collect { case (id, t) if t != null && t.codePointCount(0, t.length) >= K + W - 1 =>
+        id -> replay(t) }.toMap
+    assert(local.keySet == perDoc.keySet)
+    local.foreach { case (id, fp) => assert(fp == perDoc(id), s"doc $id") }
   }
 
   test("span summary is repartition-invariant and null-text-safe") {
